@@ -5,15 +5,16 @@ Not a port: the reference (Go) is a per-document, token-streaming JSON
 validator; this engine is columnar and distributed. What carries over is
 the *semantic contract*: the issue-code vocabulary and JSON-Pointer error
 paths (reference errors.go:10-36, ref_pathref.go:51-69), required/default/
-unknown-key/presence semantics, DoS guards, fail-fast vs collect, and
-deterministic violation ordering.
+unknown-key/presence semantics, DoS guards and fail-fast vs collect.
+Violation rows are unordered; `api.first_issue` or
+`orderBy("row_id", "path", "code")` gives goskema's issue order.
 
 Layout:
   issues        — issue codes, violation row schema, message catalog
   schema        — declarative table schema + constraint builder DSL
   rowpass       — compile schema -> vectorized per-row check pass
-  uniqueness    — cross-row key uniqueness (salted two-stage aggregate)
-  referential   — broadcast anti-join referential checks
+  uniqueness    — cross-row key uniqueness (hashed-key two-stage aggregate)
+  referential   — referential checks (inline INSET filter or broadcast anti-join)
   stats         — per-column profiling (count/null/min/max/sketches)
   drift         — histogram drift detection (PSI / KS)
   ledger        — run ledger + checkpoint/resume

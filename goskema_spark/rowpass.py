@@ -13,9 +13,10 @@ Fail-fast vs collect (reference api.go:147-156): collect keeps the full
 array; fail_fast slices it to 1 element per row (and callers can
 `violations.limit(1)` for a global first-issue stop).
 
-Deterministic ordering (reference README.md:573-574): checks are compiled
-in sorted field order, then by check kind; the exploded violations table
-sorts by (row_id, path, code).
+Ordering: checks are compiled in sorted field order, then by check kind,
+so each row's array is stable; the exploded violations table itself is
+unordered. `api.first_issue` or `orderBy("row_id", "path", "code")`
+gives goskema's issue order (reference README.md:573-574).
 """
 
 from __future__ import annotations
@@ -38,7 +39,7 @@ from goskema_spark.schema import (
     TableSchema,
 )
 
-_VIOL_DDL = "struct<path:string,code:string,message:string,rule:string,params:map<string,string>>"
+_VIOL_DDL = VIOLATION_STRUCT.simpleString()
 _VIOL_ARR_DDL = f"array<{_VIOL_DDL}>"
 
 
@@ -1164,23 +1165,32 @@ def _compiled_triple(schema: TableSchema, df: DataFrame):
         cache = {}
         schema._compiled_cache = cache
     triple = cache.get(key)
-    if triple is None or len(triple) != 3:
+    if triple is None:
         checks = compile_checks(schema, df)
         triple = (checks.any_violation(), checks.body(), checks.gate_is_exact())
         cache[key] = triple
     return triple
 
 
+def _annotate(df: DataFrame, schema: TableSchema, violations_col: str,
+              place_gate) -> DataFrame:
+    """Shared core of with_violations and _dirty_with_violations: the
+    memoized (gate, body) pair, sliced to the first issue under
+    fail_fast (api.go:147-156). Without a cheap gate every row builds
+    the body; otherwise `place_gate(df, gate, body)` decides where the
+    gate goes."""
+    gate, body, _ = _compiled_triple(schema, df)
+    if schema.fail_fast:
+        body = F.slice(body, 1, 1)
+    if gate is None:
+        return df.withColumn(violations_col, body)
+    return place_gate(df, gate, body)
+
+
 def with_violations(df: DataFrame, schema: TableSchema,
                     violations_col: str = "_violations") -> DataFrame:
     """Annotate every row with its violations array — ONE select, all
     built-in expressions (north rule: no per-row Python).
-
-    The combined Column is memoized per (schema, column dtypes): building
-    it costs hundreds of py4j round-trips, and unbound Column trees are
-    immutable and reusable across DataFrames of the same shape. This is
-    pure driver-side serial time — exactly what Amdahl punishes at higher
-    parallelism.
 
     Two-projection gate (r4): the OR of all check conditions lands in its
     OWN projection (`_gsk_dirty`), referenced twice downstream so
@@ -1191,27 +1201,24 @@ def with_violations(df: DataFrame, schema: TableSchema,
     evaluated interpreted: clean rows re-evaluated every check condition
     interpreted, and dirty rows evaluated them twice (VERDICT r3 #8 —
     the rowpass driver-bench regression)."""
-    gate, body, _ = _compiled_triple(schema, df)
-    empty = F.array().cast(_VIOL_ARR_DDL)
-    if schema.fail_fast:
-        body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
-    if gate is None:
-        # some array check has no cheap gate: every row builds anyway
-        return df.withColumn(violations_col, body)
-    # collision-proof internal name: the input may legitimately carry
-    # underscore columns (they are exempt from unknown-key checks), so
-    # never overwrite one that happens to be called _gsk_dirty
-    gname = "_gsk_dirty"
-    while gname in df.columns:
-        gname += "_"
-    d = F.col(gname)
-    # d is referenced twice and is non-trivial to re-inline, so
-    # CollapseProject preserves the projection boundary; null gate (no
-    # check could evaluate) reads as clean, matching _maybe() semantics
-    guarded = F.when(d, body).otherwise(F.when(d.isNull() | ~d, empty))
-    return (df.withColumn(gname, gate)
-            .withColumn(violations_col, guarded)
-            .drop(gname))
+    def guarded(df, gate, body):
+        # collision-proof internal name: the input may legitimately carry
+        # underscore columns (they are exempt from unknown-key checks), so
+        # never overwrite one that happens to be called _gsk_dirty
+        gname = "_gsk_dirty"
+        while gname in df.columns:
+            gname += "_"
+        d = F.col(gname)
+        # d is referenced twice and is non-trivial to re-inline, so
+        # CollapseProject preserves the projection boundary; null gate (no
+        # check could evaluate) reads as clean, matching _maybe() semantics
+        empty = F.array().cast(_VIOL_ARR_DDL)
+        body = F.when(d, body).otherwise(F.when(d.isNull() | ~d, empty))
+        return (df.withColumn(gname, gate)
+                .withColumn(violations_col, body)
+                .drop(gname))
+
+    return _annotate(df, schema, violations_col, guarded)
 
 
 def _dirty_with_violations(df: DataFrame, schema: TableSchema,
@@ -1237,45 +1244,40 @@ def _dirty_with_violations(df: DataFrame, schema: TableSchema,
     (non-exact) gates may pass rows whose body is empty; explode still
     drops those. Expects `df` to already have defaults applied (callers
     share apply_defaults with the other outputs)."""
-    gate, body, _ = _compiled_triple(schema, df)
-    if schema.fail_fast:
-        body = F.slice(body, 1, 1)  # first issue only (api.go:147-156)
-    if gate is None:
-        # some array check has no cheap gate: every row builds anyway
-        return df.withColumn(violations_col, body)
-    return df.filter(gate).withColumn(violations_col, body)
+    return _annotate(df, schema, violations_col,
+                     lambda df, gate, body: df.filter(gate).withColumn(violations_col, body))
 
 
-def dirty_annotated(df: DataFrame, schema: TableSchema,
-                    violations_col: str = "_violations") -> DataFrame:
-    """Public filter-first violations feed for callers holding the RAW
-    input (runner): applies defaults, then the gate filter + body."""
-    return _dirty_with_violations(apply_defaults(df, schema), schema,
-                                  violations_col)
+def violation_rows(df: DataFrame, row_id: Column, v: Column, carry=()) -> DataFrame:
+    """The violation-row format every producer emits: `row_id`, then the
+    VIOLATION_STRUCT fields (issues.VIOLATION_SCHEMA, reference
+    errors.go:39-54), then the `carry` passthrough columns.
+
+    `v` is one violation struct per row of `df`, or an `explode` of an
+    array of them. row_id lands in its own projection BELOW the
+    generator, so it is evaluated once per input row, not once per
+    violation."""
+    rows = df.withColumn("_row_id", row_id).select(
+        F.col("_row_id").alias("row_id"),
+        v.alias("v"),
+        *[F.col(c) for c in carry],
+    )
+    return rows.select(
+        "row_id",
+        *[F.col(f"v.{n}").alias(n) for n in VIOLATION_STRUCT.names],
+        *carry,
+    )
 
 
 def explode_violations(df: DataFrame, row_id: Column,
                        violations_col: str = "_violations",
                        carry=()) -> DataFrame:
-    """_violations array -> violations table (FIXTURES.md F5 shape), sorted
-    deterministically by (row_id, path, code) — the distributed analog of
-    goskema's issue ordering (reference README.md:573-574). `carry`
-    appends passthrough columns (e.g. the logical partition) after the
-    violation fields."""
-    v = df.withColumn("_row_id", row_id).select(
-        F.col("_row_id").alias("row_id"),
-        F.explode(F.col(violations_col)).alias("v"),
-        *[F.col(c) for c in carry],
-    )
-    return v.select(
-        "row_id",
-        F.col("v.path").alias("path"),
-        F.col("v.code").alias("code"),
-        F.col("v.message").alias("message"),
-        F.col("v.rule").alias("rule"),
-        F.col("v.params").alias("params"),
-        *carry,
-    )
+    """_violations array -> violations table (FIXTURES.md F5 shape). The
+    rows are unordered; `api.first_issue` or `orderBy("row_id", "path",
+    "code")` gives goskema's issue order (reference README.md:573-574).
+    `carry` appends passthrough columns (e.g. the logical partition)
+    after the violation fields."""
+    return violation_rows(df, row_id, F.explode(F.col(violations_col)), carry)
 
 
 def validate_rows(df: DataFrame, schema: TableSchema, row_id: Column,

@@ -35,12 +35,13 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from goskema_spark.issues import VIOLATION_SCHEMA
 from goskema_spark.referential import referential_violations
 from goskema_spark.rowpass import validate_rows
 from goskema_spark.schema import TableSchema
 from goskema_spark.uniqueness import uniqueness_violations
 
-VIOLATION_COLS = ["row_id", "path", "code", "message", "rule", "params"]
+VIOLATION_COLS = VIOLATION_SCHEMA.names
 
 
 @dataclass
@@ -51,18 +52,6 @@ class ValidationResult:
     verdicts: DataFrame           # partition_col, rows, violations, verdict
     report: dict = dc_field(default_factory=dict)
     report_path: Optional[str] = None  # parquet materialization of the report
-    _persisted: list = dc_field(default_factory=list)  # probe relations to release
-
-    def unpersist(self):
-        """Release any relations persisted for this run. Since r6 the
-        broadcast='auto' path runs no probe at all (AQE picks the join
-        from runtime stats, uniqueness.py) so nothing is persisted by
-        default — kept as the stable lifecycle hook callers already
-        wrap in try/finally."""
-        for df in self._persisted:
-            df.unpersist(blocking=False)
-        self._persisted = []
-        return self
 
 
 def validate(
@@ -100,12 +89,11 @@ def validate(
     # aggregate checks read the PLAIN input, not the annotated plan — they
     # never touch _violations, and keeping the giant check expression out
     # of their subtrees cuts driver-side analysis cost ~3x per run
-    persisted: list = []
     for uk in schema.unique_keys:
         ordinal = uk.ordinal or uk.column
         scope = uniqueness_scope if uniqueness_scope is not None else df
         uv = uniqueness_violations(scope, uk.column, ordinal, row_id, carry=carry,
-                                   broadcast=getattr(uk, "broadcast", True))
+                                   broadcast=uk.broadcast)
         if uniqueness_scope is not None and carry:
             parts = df.select(F.col(partition_col).alias("_part")).distinct()
             uv = uv.join(F.broadcast(parts),
@@ -141,16 +129,13 @@ def validate(
     v_rec = (all_viols
              .withColumn("_rec", F.lit("v"))
              .withColumn("_rows", F.lit(None).cast("bigint")))
-    null_viol_cols = [F.lit(None).cast("string").alias(c)
-                      for c in ("row_id", "path", "code", "message", "rule")]
     if carry:
         rows_rec = (df.groupBy(partition_col)
                     .agg(F.count(F.lit(1)).cast("bigint").alias("_rows")))
     else:
         rows_rec = df.agg(F.count(F.lit(1)).cast("bigint").alias("_rows"))
     rows_rec = rows_rec.select(
-        *null_viol_cols,
-        F.lit(None).cast("map<string,string>").alias("params"),
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in VIOLATION_SCHEMA.fields],
         *[F.col(c) for c in carry],
         F.lit("s").alias("_rec"),
         F.col("_rows"),
@@ -200,7 +185,6 @@ def validate(
         clean=clean,
         verdicts=verdicts,
         report_path=report_path,
-        _persisted=persisted,
     )
 
 
@@ -219,13 +203,3 @@ def _verdicts_from_report(report: DataFrame, carry, partition_col: str) -> DataF
         "verdict", F.when(F.col("violations") > 0, "fail").otherwise("pass")
     )
 
-
-def explode_with_carry(ann: DataFrame, row_id: Column, carry) -> DataFrame:
-    v = ann.withColumn("_row_id", row_id).select(
-        F.col("_row_id").alias("row_id"),
-        F.explode(F.col("_violations")).alias("v"),
-        *[F.col(c) for c in carry],
-    )
-    return v.select(
-        "row_id", "v.path", "v.code", "v.message", "v.rule", "v.params", *carry
-    )

@@ -37,34 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from goskema_spark.issues import Codes, MSG_DUPLICATE_VALUE, pointer
-from goskema_spark.rowpass import violation
-
-
-# HLL register count scales 1/rsd^2 — rsd=0.01 measured 4x slower than
-# this setting for no decision-quality gain at the 4M-key threshold
-PROBE_RSD = 0.03
-
-# default dup-key count above which the dup-key relation is NOT
-# broadcast (driver-memory guard; ~16B/key -> 64MB at the threshold,
-# with 2-4x headroom against typical driver heaps)
-BROADCAST_THRESHOLD_KEYS = 4_000_000
-
-
-def dup_extras_upper_bound(df: DataFrame, key: str,
-                           rsd: float = PROBE_RSD) -> int:
-    """HLL upper bound on the number of duplicated keys: dup_keys <=
-    count - distinct (each duplicated key contributes at least one extra
-    occurrence). r6: no longer called by uniqueness_violations — the
-    broadcast decision moved to AQE runtime stats, which removed this
-    probe job (one column scan + sketch collect serialized before the
-    main job) from every validate() run. Kept as a public sizing
-    utility for callers that want an a-priori duplicate-rate bound."""
-    kc = F.col(key)
-    stats = (df.filter(kc.isNotNull())
-             .agg(F.count(F.lit(1)).alias("_n"),
-                  F.approx_count_distinct(kc, rsd=rsd).alias("_d"))
-             .collect()[0])
-    return stats["_n"] - int(stats["_d"] * (1 - 2 * rsd))
+from goskema_spark.rowpass import violation, violation_rows
 
 
 def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
@@ -97,9 +70,7 @@ def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 0) -> DataFrame:
 
 def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
                           row_id: Column, carry=(),
-                          broadcast=True,
-                          broadcast_threshold_keys: int = BROADCAST_THRESHOLD_KEYS,
-                          persisted=None) -> DataFrame:
+                          broadcast=True) -> DataFrame:
     """Violation rows for every non-first occurrence of a duplicated key.
 
     `ordinal` must be a stable, deterministic ordering column (e.g. the
@@ -118,11 +89,11 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
     spark.sql.autoBroadcastJoinThreshold). r6: "auto" no longer runs an
     up-front HLL probe job — the probe was a full column scan + sketch
     collect serialized BEFORE the main job could be submitted; AQE makes
-    the same decision from exact runtime sizes for free.
-
-    broadcast_threshold_keys / persisted: accepted for back-compat;
-    nothing is probed or persisted anymore.
+    the same decision from exact runtime sizes for free. Any other
+    value raises ValueError.
     """
+    if broadcast is not True and broadcast is not False and broadcast != "auto":
+        raise ValueError(f"broadcast must be True, False or 'auto', got {broadcast!r}")
     # Dup detection shuffles xxhash64(key) — 8 bytes/key instead of the
     # raw (often long) key strings, roughly halving shuffle volume on a
     # mostly-unique corpus (the common case: partial aggregation cannot
@@ -137,10 +108,7 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
     # only adds a unique-keyed row to the joined subset, where the
     # first-occurrence aggregate over the TRUE key yields
     # first==ordinal and the row is filtered — correctness unaffected.
-    # normalize: any truthy value except the "auto" sentinel forces the
-    # hint (an identity `is True` test would silently drop the hint for
-    # truthy non-bool values like 1 or numpy bools)
-    force_broadcast = bool(broadcast) and broadcast != "auto"
+    force_broadcast = broadcast is True
     kc = F.col(key)
     dups = (df.filter(kc.isNotNull())
             .groupBy(F.xxhash64(kc).alias("_kh"))
@@ -170,11 +138,7 @@ def uniqueness_violations(df: DataFrame, key: str, ordinal: str,
         params={"first": F.col("_first"), "dup": F.col(ordinal), "key": F.col(key)},
         message=MSG_DUPLICATE_VALUE,
     )
-    return sub.select(
-        row_id.alias("row_id"),
-        viol.alias("v"),
-        *[F.col(c) for c in carry],
-    ).select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params", *carry)
+    return violation_rows(sub, row_id, viol, carry)
 
 
 def within_row_unique_violations(df: DataFrame, array_col: str, row_id: Column) -> DataFrame:
@@ -198,6 +162,8 @@ def within_row_unique_violations(df: DataFrame, array_col: str, row_id: Column) 
             lambda s: s["idx"] != s["first"],
         ),
     )
+    # the violation struct reads the exploded element, so the generator
+    # sits below violation_rows here; row_id is already one per input row
     exploded = (
         df.withColumn("_rid", row_id)
         .select("_rid", F.explode(dup_structs).alias("d"))
@@ -209,5 +175,4 @@ def within_row_unique_violations(df: DataFrame, array_col: str, row_id: Column) 
         params={"first": F.col("d.first"), "dup": F.col("d.idx"), "key": F.col("d.val")},
         message=MSG_DUPLICATE_VALUE,
     )
-    return exploded.select(F.col("_rid").alias("row_id"), viol.alias("v")) \
-        .select("row_id", "v.path", "v.code", "v.message", "v.rule", "v.params")
+    return violation_rows(exploded, F.col("_rid"), viol)

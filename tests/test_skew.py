@@ -44,9 +44,9 @@ def test_hot_key_violations(spark, skew_df):
 
 def test_high_duplicate_rate_fallback(spark):
     """Pathological duplicate rate (50% of keys duplicated): the "auto"
-    strategy must fall back to a non-broadcast join above the key cap
-    and still produce exact results; broadcast=False (pure AQE) must
-    agree."""
+    strategy must carry no forced broadcast hint and still produce exact
+    results; broadcast=True must carry the hint; broadcast=False (pure
+    AQE) must agree."""
     n = 20_000
     df = spark.range(n).select(
         # ids 0..n/2-1 appear twice (id and id+n/2 share a key)
@@ -56,11 +56,10 @@ def test_high_duplicate_rate_fallback(spark):
     rid = F.col("doc_id")
     expected = n // 2  # one non-first occurrence per duplicated key
 
-    auto = uniqueness_violations(df, "doc_id", "_ord", rid,
-                                 broadcast="auto", broadcast_threshold_keys=100)
-    # above the cap the dup-key join must NOT carry a forced broadcast
-    # hint (AQE may still pick broadcast from runtime sizes — the point
-    # is no forced 10^8-key build side)
+    auto = uniqueness_violations(df, "doc_id", "_ord", rid, broadcast="auto")
+    # "auto" must NOT carry a forced broadcast hint on the dup-key join
+    # (AQE may still pick broadcast from runtime sizes — the point is no
+    # forced 10^8-key build side)
     assert "strategy=broadcast" not in auto._jdf.queryExecution().analyzed().toString()
     assert auto.count() == expected
 
@@ -72,9 +71,9 @@ def test_high_duplicate_rate_fallback(spark):
 
 
 def test_auto_probe_leaves_no_cached_relations(spark, tmp_path):
-    """broadcast='auto' persists a dup-key probe relation; the run must
-    release it — directly (leak-free default), after result.unpersist()
-    (lazy validate), and automatically after the report write."""
+    """No validation path persists a relation: a direct broadcast='auto'
+    uniqueness check, a lazy validate() and a report-path validate()
+    each leave the session's cached-RDD set as they found it."""
     from goskema_spark.corpus import (
         corpus_from_documents, corpus_schema, dim_source_df, row_id_col,
     )
@@ -93,7 +92,7 @@ def test_auto_probe_leaves_no_cached_relations(spark, tmp_path):
     base = rdd_ids()
 
     def assert_no_new_caches():
-        # unpersist(blocking=False) is async — poll briefly
+        # context cleaning is async — poll briefly
         for _ in range(50):
             if not (rdd_ids() - base):
                 return
@@ -104,19 +103,18 @@ def test_auto_probe_leaves_no_cached_relations(spark, tmp_path):
     dims = {"dim_source": dim_source_df(spark)}
     assert_no_new_caches()
 
-    # direct call, no lifecycle list -> released before returning
+    # direct call
     v = uniqueness_violations(corpus, "doc_id", "_ord", row_id_col(),
                               broadcast="auto")
     v.count()
     assert_no_new_caches()
 
-    # lazy validate -> held for the run, released by unpersist()
+    # lazy validate
     res = validate(corpus, corpus_schema(), row_id_col(), dims=dims)
     res.violations.count()
-    res.unpersist()
     assert_no_new_caches()
 
-    # report-path validate -> released inside validate()
+    # report-path validate
     res2 = validate(corpus, corpus_schema(), row_id_col(), dims=dims,
                     report_path=str(tmp_path / "report"))
     assert_no_new_caches()

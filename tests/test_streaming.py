@@ -48,7 +48,6 @@ def test_stream_validation_matches_batch(spark):
         a = {(r["row_id"], r["path"], r["code"]) for r in batch_rowlevel.collect()}
         b = {(r["row_id"], r["path"], r["code"]) for r in stream_rowlevel.collect()}
         assert a == b
-        ref.violations.unpersist()
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
