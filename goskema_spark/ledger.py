@@ -22,9 +22,12 @@ Protocol:
     (`source`): stable across cluster sizes and re-planning, unlike
     spark_partition_id().
   - a partition is COMPLETE once its ledger row is durably written
-    (parquet append of one file per batch, atomic enough for a
-    single-writer run; Iceberg commits would make this transactional on
-    a real lakehouse).
+    (parquet append of one file per batch). The append is NOT atomic: a
+    driver that dies mid-append can leave committed task files under
+    <ledger>/_temporary, which the next append's job commit would merge
+    in beside the resumed rows. Under the single-writer protocol nothing
+    else writes there, so every append first deletes that directory.
+    Iceberg commits would make this transactional on a real lakehouse.
   - resume: re-running with the same run_id loads the ledger, skips
     completed partitions via partition-pruned scan (filter on the
     partition column — pushed down to the reader), validates only the
@@ -230,8 +233,18 @@ def run_with_ledger(
         started.alias("started_at"),
         F.current_timestamp().alias("finished_at"),
     )
+    _drop_uncommitted(spark, ledger_path)
     ledger_rows.write.mode("append").parquet(ledger_path)
     return res
+
+
+def _drop_uncommitted(spark: SparkSession, ledger_path: str) -> None:
+    """Delete what a crashed append left in <ledger>/_temporary (see the
+    protocol in the module docstring). Goes through the Hadoop FileSystem
+    of the path, so s3a:// and hdfs:// ledgers are cleaned too."""
+    jvm = spark.sparkContext._jvm
+    tmp = jvm.org.apache.hadoop.fs.Path(ledger_path.rstrip("/") + "/_temporary")
+    tmp.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).delete(tmp, True)
 
 
 def read_ledger(spark: SparkSession, ledger_path: str, run_id: str) -> DataFrame:

@@ -9,6 +9,11 @@ structs (for per-element checks, reference dsl/array.go:79-117 issues at
 `/<field>/<idx>`), all concatenated into a `_violations` array column and
 filtered for nulls.
 
+One path per job: the table root, nested structs and array-element
+objects compile through one member walk (`_compile_members`), and each
+per-item check set is one condition list from which both its violation
+builder and its gate derive (see CompiledChecks).
+
 Fail-fast vs collect (reference api.go:147-156): collect keeps the full
 array; fail_fast slices it to 1 element per row (and callers can
 `violations.limit(1)` for a global first-issue stop).
@@ -21,6 +26,7 @@ gives goskema's issue order (reference README.md:573-574).
 
 from __future__ import annotations
 
+import copy
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -68,13 +74,6 @@ def violation(path, code: str, rule: Optional[str] = None, params: Optional[dict
     )
 
 
-def _maybe(cond: Column, viol: Column) -> Column:
-    """Violation struct when cond is TRUE, else null (null-safe: a NULL
-    condition means 'cannot evaluate' and does not fire, matching the
-    reference where rules only run on successfully-parsed values)."""
-    return F.when(cond, viol)
-
-
 class CompiledChecks:
     """scalars: list[(cond, struct)]; arrays: list[(gate|None, array<struct>)].
 
@@ -86,7 +85,15 @@ class CompiledChecks:
     through one cheap OR of all check conditions (codegen-friendly
     comparisons); only rows with at least one firing check — bounded by
     the violation rate, ~0 at production quality — pay the interpreted
-    struct construction."""
+    struct construction.
+
+    Per-item check sets (array elements, map entries) are each written
+    down ONCE, as a list of (cond(item), code, rule, params(item),
+    message) entries: `_first_of` builds the violation of the first
+    entry that fires and `_any_of` the exists() gate, so the body and
+    its gate cannot disagree on which checks exist. The integral-array
+    gate is the one restatement, in its codegen'd array_min/array_max
+    form (`_fast_elem_gate`)."""
 
     def __init__(self):
         self.scalars: list = []   # (cond, violation struct)
@@ -119,7 +126,7 @@ class CompiledChecks:
         """Cheap OR over every check condition; None if some array check
         has no gate (then every row must build). NULL conditions read as
         'did not fire' (null OR false = null -> when() does not fire),
-        matching _maybe()'s null semantics."""
+        matching body()'s null semantics."""
         conds = [c for c, _ in self.scalars]
         for g, _, _ in self.arrays:
             if g is None:
@@ -134,8 +141,8 @@ class CompiledChecks:
 
     def gate_is_exact(self) -> bool:
         """True when any_violation() is EXACT: gate fired <=> the row has
-        >= 1 violation. Scalar checks are exact by construction (_maybe
-        fires a struct exactly when the condition is true); array checks
+        >= 1 violation. Scalar checks are exact by construction (body()
+        builds a struct exactly when the condition is true); array checks
         declare their own exactness (the Or-combinator's minimal-branch
         gate is the one wide gate today)."""
         return all(exact for _, _, exact in self.arrays)
@@ -143,10 +150,15 @@ class CompiledChecks:
     def body(self) -> Column:
         """The UNGATED violations-array construction (interpreted HOF
         territory) — callers that want the clean-row fast path pair this
-        with any_violation() in a separate projection (with_violations)."""
+        with any_violation() in a separate projection (with_violations).
+
+        A scalar check yields its struct when its condition is TRUE and
+        null otherwise: a NULL condition means 'cannot evaluate' and does
+        not fire, matching the reference, where rules only run on
+        successfully-parsed values."""
         parts = []
         if self.scalars:
-            parts.append(F.array(*[_maybe(c, v) for c, v in self.scalars]))
+            parts.append(F.array(*[F.when(c, v) for c, v in self.scalars]))
         parts.extend(a for _, a, _ in self.arrays)
         if not parts:
             return F.array().cast(_VIOL_ARR_DDL)
@@ -167,34 +179,7 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
     phys = {sf.name: sf.dataType for sf in df.schema.fields}
     if "_presence" in df.columns:
         out.presence = F.col("_presence")
-
-    # unknown-column policy (reference types.go:4-10, dsl/object_core.go:136-169)
-    declared = set(schema.field_names()) | {"_ord", "_row_id"}
-    if schema.passthrough_target:
-        declared.add(schema.passthrough_target)
-    unknown = sorted(c for c in df.columns if c not in declared and not c.startswith("_"))
-    unknown = _compile_pattern_keys(out, schema, unknown,
-                                    lambda c: (F.col(c), pointer(c), phys.get(c)))
-    if schema.unknown == "strict":
-        for c in unknown:
-            out.add(F.lit(True), pointer(c), Codes.UNKNOWN_KEY, rule="unknown_strict")
-    elif schema.unknown == "schema" and schema.ap_field is not None:
-        # additionalProperties-with-schema: overflow columns validate
-        # against the declared value spec instead of being stripped
-        # (beyond the reference MVP warn+prune, kubeopenapi.go:157-160)
-        from dataclasses import replace
-        for c in unknown:
-            _compile_field(out, replace(schema.ap_field, name=c), F.col(c),
-                           pointer(c), phys.get(c))
-
-    for f in sorted(schema.fields, key=lambda x: x.name):
-        present = f.name in df.columns
-        if not present:
-            if f.required and f.default is None:
-                # column absent from table schema = missing (SURVEY §7.3)
-                out.add(F.lit(True), pointer(f.name), Codes.REQUIRED, rule="required")
-            continue
-        _compile_field(out, f, F.col(f.name), pointer(f.name), phys.get(f.name))
+    _compile_members(out, schema, F.col, "", phys)
 
     # discriminated union (reference dsl/union.go:17-52): a variant is
     # either a full TableSchema (the whole variant check set — required-
@@ -220,34 +205,22 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
                         "only compile at table level")
                 sub = CompiledChecks()
                 sub.presence = out.presence
-                for vf in sorted(var.fields, key=lambda x: x.name):
-                    if vf.name not in df.columns:
-                        if vf.required and vf.default is None:
-                            sub.add(F.lit(True), pointer(vf.name), Codes.REQUIRED,
-                                    rule="required")
-                        continue
-                    _compile_field(sub, vf, F.col(vf.name), pointer(vf.name),
-                                   phys.get(vf.name))
+                # declared fields only: the variant's unknown policy must
+                # not judge the table's other columns
+                _compile_declared(sub, var, F.col, "", phys)
                 for r in var.refinements:
-                    cond = r.violates()
-                    if r.when is not None:
-                        cond = r.when() & cond
-                    sub.add(cond, r.path, r.code, rule=r.name,
+                    sub.add(_refinement_cond(r), r.path, r.code, rule=r.name,
                             params=r.params() if r.params else None)
                 _gate_checks(out, sub, gate)
             else:
                 for r in var:
-                    cond = gate & r.violates()
-                    out.add(cond, r.path or dpath, r.code, rule=r.name,
-                            params=r.params() if r.params else None)
+                    out.add(gate & _refinement_cond(r), r.path or dpath, r.code,
+                            rule=r.name, params=r.params() if r.params else None)
 
     # cross-field refinements (reference dsl/object_builder.go:129-135,
     # dsl/typed_rules.go:56-91 — rule name stamped into the row)
     for r in schema.refinements:
-        cond = r.violates()
-        if r.when is not None:  # presence gating (domain_types.go:25-34)
-            cond = r.when() & cond
-        out.add(cond, r.path, r.code, rule=r.name,
+        out.add(_refinement_cond(r), r.path, r.code, rule=r.name,
                 params=r.params() if r.params else None)
 
     # Or-combinator (reference rules/rules.go:376-398): evaluate every
@@ -259,11 +232,9 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
         for branch in orr.branches:
             items = []
             for r in branch:
-                cond = r.violates()
-                if r.when is not None:
-                    cond = r.when() & cond
+                cond = _refinement_cond(r)
                 all_conds.append(cond)
-                items.append(_maybe(cond, violation(
+                items.append(F.when(cond, violation(
                     r.path, r.code, rule=f"{orr.name}:{r.name}",
                     params=r.params() if r.params else None)))
             branch_arrays.append(
@@ -283,6 +254,58 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
         out.add_array(chosen, gate=gate if all_conds else None, exact=False)
 
     return out
+
+
+def _refinement_cond(r) -> Column:
+    """A refinement's firing condition, gated on its presence condition
+    when it declares one (reference domain_types.go:25-34)."""
+    cond = r.violates()
+    return cond if r.when is None else r.when() & cond
+
+
+def _compile_members(out: CompiledChecks, schema: TableSchema, bind, p,
+                     types: dict) -> None:
+    """Compile one object level — the table root, a nested struct or an
+    array-element object — the same way at every depth (reference
+    dsl/object_core.go:136-169): pattern keys, then the unknown-key
+    policy, then the declared fields in sorted order.
+
+    `bind` maps a member name to its Column (F.col at the root,
+    col.getField below it), `types` maps member names to physical Spark
+    types, and member paths are rebased under `p`. `_`-prefixed members
+    are internal (_ord, _row_id, _presence, ...) and never unknown."""
+    from dataclasses import replace
+
+    declared = set(schema.field_names()) | {schema.passthrough_target}
+    unknown = sorted(n for n in types if n not in declared and not n.startswith("_"))
+    unknown = _compile_pattern_keys(
+        out, schema, unknown, lambda n: (bind(n), _pjoin(p, pointer(n)), types[n]))
+    if schema.unknown == "strict":
+        for n in unknown:
+            out.add(F.lit(True), _pjoin(p, pointer(n)), Codes.UNKNOWN_KEY,
+                    rule="unknown_strict")
+    elif schema.unknown == "schema" and schema.ap_field is not None:
+        # additionalProperties-with-schema: unknown members validate
+        # against the declared value spec instead of being stripped
+        # (beyond the reference MVP warn+prune, kubeopenapi.go:157-160)
+        for n in unknown:
+            _compile_field(out, replace(schema.ap_field, name=n), bind(n),
+                           _pjoin(p, pointer(n)), types[n])
+    _compile_declared(out, schema, bind, p, types)
+
+
+def _compile_declared(out: CompiledChecks, schema: TableSchema, bind, p,
+                      types: dict) -> None:
+    """The declared-fields half of _compile_members (same arguments). A
+    declared member missing from `types` is `required` when the schema
+    says so (SURVEY §7.3) and otherwise compiles no checks."""
+    for f in sorted(schema.fields, key=lambda x: x.name):
+        fp = _pjoin(p, pointer(f.name))
+        if f.name not in types:
+            if f.required and f.default is None:
+                out.add(F.lit(True), fp, Codes.REQUIRED, rule="required")
+            continue
+        _compile_field(out, f, bind(f.name), fp, types[f.name])
 
 
 def _pjoin(p, suffix):
@@ -367,30 +390,8 @@ def _compile_object(sub: CompiledChecks, sub_schema: TableSchema, col: Column,
         raise TypeError(
             f"nested schema at '{p}' declares refinements, which only "
             "compile at table level — move the rule to the root schema")
-    child_types = {sf.name: sf.dataType for sf in phys_struct.fields}
-    declared = set(sub_schema.field_names())
-    unknown = sorted(n for n in set(child_types) - declared
-                     if not n.startswith("_"))
-    unknown = _compile_pattern_keys(
-        sub, sub_schema, unknown,
-        lambda n: (col.getField(n), _pjoin(p, pointer(n)), child_types[n]))
-    if sub_schema.unknown == "strict":
-        for name in unknown:
-            sub.add(F.lit(True), _pjoin(p, pointer(name)), Codes.UNKNOWN_KEY,
-                    rule="unknown_strict")
-    elif sub_schema.unknown == "schema" and sub_schema.ap_field is not None:
-        from dataclasses import replace
-        for name in unknown:
-            _compile_field(sub, replace(sub_schema.ap_field, name=name),
-                           col.getField(name), _pjoin(p, pointer(name)),
-                           child_types[name])
-    for cf in sorted(sub_schema.fields, key=lambda x: x.name):
-        cp = _pjoin(p, pointer(cf.name))
-        if cf.name not in child_types:
-            if cf.required and cf.default is None:
-                sub.add(F.lit(True), cp, Codes.REQUIRED, rule="required")
-            continue
-        _compile_field(sub, cf, col.getField(cf.name), cp, child_types[cf.name])
+    _compile_members(sub, sub_schema, col.getField, p,
+                     {sf.name: sf.dataType for sf in phys_struct.fields})
 
 
 def _compile_nested(out: CompiledChecks, f: Field, col: Column, p, phys_type):
@@ -434,10 +435,6 @@ def _gate_checks(out: CompiledChecks, sub: CompiledChecks, gate: Column):
         out.arrays.append((None if g is None else (gate & g),
                            F.when(gate, a).otherwise(F.array().cast(_VIOL_ARR_DDL)),
                            exact))
-
-
-def _int_bounds(dtype: str):
-    return INT_RANGES.get(dtype)
 
 
 def _json_type_match(col: Column, t: str) -> Optional[Column]:
@@ -645,7 +642,7 @@ def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_t
     if bits and (actual_type in ("bigint", "int", "smallint", "double", "float")
                  or actual_type.startswith("decimal")):
         lo, hi = INT_RANGES[bits]
-        phys = _int_bounds({"bigint": "int64", "int": "int32", "smallint": "int16"}.get(actual_type, "int64"))
+        phys = INT_RANGES.get({"bigint": "int64", "int": "int32", "smallint": "int16"}.get(actual_type, "int64"))
         if phys is None or phys[0] < lo or phys[1] > hi:
             num = (col.cast("double")
                    if actual_type in ("double", "float") or actual_type.startswith("decimal")
@@ -683,8 +680,8 @@ _INT_ELEM_TYPES = {"int8", "int16", "int32", "int64", "byte", "short",
 def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
     """Whole-stage-codegen replacement for the per-element exists() gate.
 
-    exists(col, elem_bad) contains a lambda, and any higher-order
-    function anywhere in a projection forces the WHOLE projection to
+    The exists() gate contains a lambda, and any higher-order function
+    anywhere in a projection forces the WHOLE projection to
     interpreted evaluation — so every row (clean ones included) paid
     interpreted per-element dispatch for the gate (measured 1.25s vs
     0.58s for this equivalent on the 12.8M-row driver-bench corpus).
@@ -719,8 +716,7 @@ def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
     if spec.elem not in _INT_ELEM_TYPES:
         return None
     conds = []
-    bounds = _int_bounds(spec.elem) if (
-        spec.elem in INT_RANGES and actual_type == "array<bigint>") else None
+    bounds = INT_RANGES.get(spec.elem) if actual_type == "array<bigint>" else None
     if bounds:
         conds.append(F.array_min(col) < bounds[0])
         conds.append(F.array_max(col) > bounds[1])
@@ -763,6 +759,29 @@ def _fast_elem_gate(col: Column, spec, actual_type: str) -> Optional[Column]:
     return gate
 
 
+def _first_of(conds: list, path, *item) -> Column:
+    """The violation of the FIRST entry of `conds` that fires on `item`
+    (an array element, or a map entry's key and value), else null. Each
+    entry is (cond(*item), code, rule, params(*item) | None, message |
+    None); a NULL condition does not fire."""
+    expr = F.lit(None).cast(_VIOL_DDL)
+    for cond, code, rule, params, message in reversed(conds):
+        expr = F.when(cond(*item),
+                      violation(path, code, rule,
+                                params(*item) if params else None,
+                                message=message)).otherwise(expr)
+    return expr
+
+
+def _any_of(conds: list, *item) -> Column:
+    """The gate of _first_of: TRUE when some entry of `conds` fires on
+    `item`."""
+    bad = F.lit(False)
+    for cond, *_ in conds:
+        bad = bad | cond(*item)
+    return bad
+
+
 def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     from pyspark.sql import types as T
 
@@ -786,64 +805,45 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
         out.add(nn & (sz > spec.max_len), p, Codes.TOO_LONG, rule="array_max",
                 params={"max": spec.max_len, "got": sz})
 
-    # per-element checks with /<field>/<idx> paths
-    # (reference dsl/array.go:79-117; paths rebased like /items/0/foo)
-    elem_conds = []
-    def elem_viol(t, i):
-        path = idx_path(i)
-        conds = []
+    # per-element checks with /<field>/<idx> paths, first firing check
+    # per element (reference dsl/array.go:79-117; paths rebased like
+    # /items/0/foo). A NULL condition (NULL element) falls through to
+    # the next entry, so the bound checks need no isNotNull guard.
+    conds = []
+    if spec.elem_schema is None:
         if not spec.elem_nullable:
-            conds.append((t.isNull(), Codes.INVALID_TYPE, "elem_type", None))
-        bounds = _int_bounds(spec.elem) if spec.elem in INT_RANGES else None
-        if bounds and actual_type == "array<bigint>":
+            conds.append((lambda t: t.isNull(), Codes.INVALID_TYPE, "elem_type",
+                          None, None))
+        bounds = INT_RANGES.get(spec.elem) if actual_type == "array<bigint>" else None
+        if bounds:
             lo, hi = bounds
-            conds.append(((t < lo) | (t > hi), Codes.OVERFLOW, f"elem_range_{spec.elem}",
-                          {"min": lo, "max": hi, "got": t}))
-        if spec.elem_min is not None:
-            conds.append((t.isNotNull() & (t < spec.elem_min), Codes.DOMAIN_RANGE, "elem_domain",
-                          {"min": spec.elem_min, "max": spec.elem_max, "got": t}))
-        if spec.elem_max is not None:
-            conds.append((t.isNotNull() & (t >= spec.elem_max), Codes.DOMAIN_RANGE, "elem_domain",
-                          {"min": spec.elem_min, "max": spec.elem_max, "got": t}))
-        if spec.elem_max_incl is not None:
-            conds.append((t.isNotNull() & (t > spec.elem_max_incl), Codes.DOMAIN_RANGE,
-                          "elem_domain",
-                          {"min": spec.elem_min, "max": spec.elem_max_incl, "got": t}))
-        expr = F.lit(None).cast(_VIOL_DDL)
-        for cond, code, rule, params in reversed(conds):
-            expr = F.when(cond, violation(path, code, rule, params)).otherwise(expr)
-        return expr
+            rng = (Codes.OVERFLOW, f"elem_range_{spec.elem}",
+                   lambda t: {"min": lo, "max": hi, "got": t}, None)
+            conds += [(lambda t: t < lo, *rng), (lambda t: t > hi, *rng)]
 
-    has_elem_checks = spec.elem_schema is None and (
-        (not spec.elem_nullable) or spec.elem_min is not None
-        or spec.elem_max is not None or spec.elem_max_incl is not None
-        or (spec.elem in INT_RANGES and actual_type == "array<bigint>"))
-    if has_elem_checks:
-        # fast path: a cheap short-circuiting exists() gates the expensive
+        def dom(hi):
+            return lambda t: {"min": spec.elem_min, "max": hi, "got": t}
+        if spec.elem_min is not None:
+            conds.append((lambda t: t < spec.elem_min, Codes.DOMAIN_RANGE,
+                          "elem_domain", dom(spec.elem_max), None))
+        if spec.elem_max is not None:
+            conds.append((lambda t: t >= spec.elem_max, Codes.DOMAIN_RANGE,
+                          "elem_domain", dom(spec.elem_max), None))
+        if spec.elem_max_incl is not None:
+            conds.append((lambda t: t > spec.elem_max_incl, Codes.DOMAIN_RANGE,
+                          "elem_domain", dom(spec.elem_max_incl), None))
+    if conds:
+        # a cheap short-circuiting exists() gates the expensive
         # per-element struct construction — clean rows (the overwhelming
         # majority at scale) never build violation structs
-        def elem_bad(t):
-            cond = F.lit(False)
-            if not spec.elem_nullable:
-                cond = cond | t.isNull()
-            bounds = _int_bounds(spec.elem) if spec.elem in INT_RANGES else None
-            if bounds and actual_type == "array<bigint>":
-                cond = cond | (t < bounds[0]) | (t > bounds[1])
-            if spec.elem_min is not None:
-                cond = cond | (t < spec.elem_min)
-            if spec.elem_max is not None:
-                cond = cond | (t >= spec.elem_max)
-            if spec.elem_max_incl is not None:
-                cond = cond | (t > spec.elem_max_incl)
-            return cond
-
         arr = F.when(
-            F.exists(col, elem_bad),
-            F.filter(F.transform(col, elem_viol), lambda x: x.isNotNull()),
-        ).otherwise(F.array().cast(_VIOL_ARR_DDL))
+            F.exists(col, lambda t: _any_of(conds, t)),
+            F.filter(F.transform(col, lambda t, i: _first_of(conds, idx_path(i), t)),
+                     lambda x: x.isNotNull()),
+        ).otherwise(empty)
         fast = _fast_elem_gate(col, spec, actual_type)
         out.add_array(arr, gate=fast if fast is not None
-                      else F.exists(col, elem_bad))
+                      else F.exists(col, lambda t: _any_of(conds, t)))
 
     # contains counter (reference dsl/array.go:51-56, WithStreamContains)
     if spec.contains_pred is not None:
@@ -1108,23 +1108,11 @@ def _compile_map(out: CompiledChecks, f: Field, col: Column, p: str):
     if not conds:
         return
 
-    def entry_viol(k, v):
-        expr = F.lit(None).cast(_VIOL_DDL)
-        for cond, code, rule, params, message in reversed(conds):
-            expr = F.when(cond(k, v),
-                          violation(key_path(k), code, rule,
-                                    params(k, v) if params else None,
-                                    message=message)).otherwise(expr)
-        return expr
-
-    def any_entry_bad(e):
-        bad = F.lit(False)
-        for cond, _, _, _, _ in conds:
-            bad = bad | cond(e["key"], e["value"])
-        return bad
-    entries = F.transform(F.map_entries(col), lambda e: entry_viol(e["key"], e["value"]))
+    entries = F.transform(F.map_entries(col), lambda e: _first_of(
+        conds, key_path(e["key"]), e["key"], e["value"]))
     out.add_array(F.filter(entries, lambda x: x.isNotNull()),
-                  gate=F.exists(F.map_entries(col), any_entry_bad))
+                  gate=F.exists(F.map_entries(col),
+                                lambda e: _any_of(conds, e["key"], e["value"])))
 
 
 # --------------------------------------------------------------------------
@@ -1157,18 +1145,23 @@ def _compiled_triple(schema: TableSchema, df: DataFrame):
     building the Column trees costs hundreds of py4j round-trips, and
     unbound Column trees are immutable and reusable across DataFrames of
     the same shape — pure driver-side serial time that Amdahl punishes
-    at higher parallelism."""
-    key = (tuple(sorted(df.dtypes)), df.columns.count("_violations"),
-           getattr(schema, "_version", 0))
-    cache = getattr(schema, "_compiled_cache", None)
-    if cache is None:
-        cache = {}
-        schema._compiled_cache = cache
-    triple = cache.get(key)
+    at higher parallelism.
+
+    The memo keeps a deep copy of the schema it was compiled from and is
+    dropped as soon as the schema no longer compares equal to it, so any
+    change — a builder call or a plain attribute assignment such as
+    `schema.unknown = "strip"` — recompiles. Callables (refinement
+    closures, contains predicates) compare by identity."""
+    memo = getattr(schema, "_compiled_cache", None)
+    if memo is None or memo[0] != schema:
+        memo = (copy.deepcopy(schema), {})
+        schema._compiled_cache = memo
+    key = tuple(sorted(df.dtypes))
+    triple = memo[1].get(key)
     if triple is None:
         checks = compile_checks(schema, df)
         triple = (checks.any_violation(), checks.body(), checks.gate_is_exact())
-        cache[key] = triple
+        memo[1][key] = triple
     return triple
 
 
@@ -1211,7 +1204,7 @@ def with_violations(df: DataFrame, schema: TableSchema,
         d = F.col(gname)
         # d is referenced twice and is non-trivial to re-inline, so
         # CollapseProject preserves the projection boundary; null gate (no
-        # check could evaluate) reads as clean, matching _maybe() semantics
+        # check could evaluate) reads as clean, matching body()'s semantics
         empty = F.array().cast(_VIOL_ARR_DDL)
         body = F.when(d, body).otherwise(F.when(d.isNull() | ~d, empty))
         return (df.withColumn(gname, gate)

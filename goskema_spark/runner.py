@@ -1,8 +1,9 @@
 """Validator orchestration: full validation run -> violations, per-partition
 verdicts, stats, drift, ledger rows.
 
-Lifecycle (SURVEY §3.4): scan -> [explicit repartition by
-(source, hash(doc_id))] -> ONE fused report job whose branch stages run
+Lifecycle (SURVEY §3.4): scan (callers apply the explicit repartition
+by (source, hash(doc_id)) to the input, as the CLI's --repartition
+does) -> ONE fused report job whose branch stages run
 concurrently — vectorized row pass, uniqueness aggregate, referential
 anti-join, and a column-pruned per-partition row count — tagged by `_rec`
 and unioned into a single report relation. Fail-fast vs collect follows
@@ -60,7 +61,6 @@ def validate(
     row_id: Column,
     dims: Optional[dict] = None,
     partition_col: str = "source",
-    repartition: int = 0,
     report_path: Optional[str] = None,
     report_partitions: int = 0,
     uniqueness_scope: Optional[DataFrame] = None,
@@ -78,10 +78,6 @@ def validate(
     filtered to df's partitions.
     """
     dims = dims or {}
-    if repartition:
-        # north rule: explicit repartition by (source, hash(doc_id))
-        df = df.repartition(repartition, F.col(partition_col), F.xxhash64(row_id))
-
     # carry the logical partition through aggregate checks for verdicts
     carry = [partition_col] if partition_col in df.columns else []
     ann, rowpass_viols, clean = validate_rows(df, schema, row_id, carry=carry)

@@ -263,15 +263,12 @@ class TableSchema:
     foreign_keys: list = dc_field(default_factory=list)
     discriminator: Optional[Discriminator] = None
     fail_fast: bool = False  # ParseOpt{FailFast} (reference api.go:147-156)
-    # mutation counter: part of the compiled-checks memo key in rowpass.py,
-    # so chaining refine()/unique()/discriminate() after a validation run
-    # never reuses stale compiled Columns
-    _version: int = 0
 
     def __getstate__(self):
         # the compiled-checks memo holds JVM-bound Column objects; a
         # schema that validated once must still cloudpickle to executors
-        # (ingest_json closures) — drop the cache, it rebuilds lazily
+        # (ingest_json closures) and deep-copy into the memo's own
+        # snapshot (rowpass._compiled_triple) — drop it, it rebuilds lazily
         state = dict(self.__dict__)
         state.pop("_compiled_cache", None)
         return state
@@ -281,13 +278,11 @@ class TableSchema:
         self.refinements.append(
             Refinement(name=name, path=path, violates=violates, code=code, params=params, when=when)
         )
-        self._version += 1
         return self
 
     def or_refine(self, name, branches):
         """branches: list of Refinement lists; see OrRefinement."""
         self.or_refinements.append(OrRefinement(name=name, branches=branches))
-        self._version += 1
         return self
 
     def unique(self, column, ordinal=None, broadcast=True):
@@ -298,19 +293,16 @@ class TableSchema:
         rate may be pathological (see uniqueness.py)."""
         self.unique_keys.append(
             UniqueKey(column=column, ordinal=ordinal, broadcast=broadcast))
-        self._version += 1
         return self
 
     def foreign_key(self, column, dim_name, dim_column=None, code="invalid_enum"):
         self.foreign_keys.append(
             ForeignKey(column=column, dim_name=dim_name, dim_column=dim_column or column, code=code)
         )
-        self._version += 1
         return self
 
     def discriminate(self, column, variants):
         self.discriminator = Discriminator(column=column, variants=variants)
-        self._version += 1
         return self
 
     # -- projections -------------------------------------------------------

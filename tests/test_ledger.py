@@ -155,3 +155,46 @@ def test_fail_limit_reaches_null_partition_and_timestamps(spark):
         assert any(r["started_at"] < r["finished_at"] for r in led)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
+
+
+def test_resume_drops_committed_task_file_of_crashed_append(spark):
+    """A driver that dies mid-append can leave a committed task file
+    under <ledger>/_temporary/0/task_*; the next append's job commit
+    would merge it in beside the resumed row. Resume must count every
+    partition exactly once."""
+    import glob
+    import os
+
+    corpus = corpus_from_documents(spark, SF)
+    dims = {"dim_source": dim_source_df(spark)}
+    tmp = tempfile.mkdtemp()
+    try:
+        run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
+                        run_id="full", ledger_path=f"{tmp}/led_full", dims=dims)
+        full_rows = read_ledger(spark, f"{tmp}/led_full", "full")
+        full = _ledger_key(full_rows.collect())
+
+        run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
+                        run_id="r1", ledger_path=f"{tmp}/led", dims=dims,
+                        fail_partition_limit=5)
+        done = {r["source"] for r in read_ledger(spark, f"{tmp}/led", "r1").collect()}
+        pending = sorted(r["source"] for r in full_rows.collect()
+                         if r["source"] is not None and r["source"] not in done)[0]
+        # the unfinished partition's ledger row, as a task of the crashed
+        # append committed it before the driver died
+        (full_rows.filter(F.col("source") == pending)
+         .withColumn("run_id", F.lit("r1"))
+         .coalesce(1).write.parquet(f"{tmp}/planted"))
+        task_dir = f"{tmp}/led/_temporary/0/task_202610170000_0001_m_000000"
+        os.makedirs(task_dir)
+        for part in glob.glob(f"{tmp}/planted/part-*.parquet"):
+            shutil.copy(part, task_dir)
+
+        run_with_ledger(spark, corpus, corpus_schema(), row_id_col(),
+                        run_id="r1", ledger_path=f"{tmp}/led", dims=dims)
+        rows = read_ledger(spark, f"{tmp}/led", "r1").collect()
+        sources = [r["source"] for r in rows]
+        assert len(sources) == len(set(sources))
+        assert _ledger_key(rows) == full
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)

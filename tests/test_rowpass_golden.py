@@ -119,3 +119,68 @@ def test_unknown_column_strict(spark):
     unknown = viols.filter(F.col("code") == "unknown_key")
     assert unknown.count() == 64
     assert unknown.select("path").distinct().collect()[0]["path"] == "/zzz"
+
+
+def test_elem_checks_first_match_on_both_gate_paths(spark):
+    """Per-element checks report the FIRST firing check per element at
+    /<field>/<idx> (reference dsl/array.go:79-117), whichever gate
+    guards the row: `a` (array<bigint> declared int32, bounded) takes the
+    lambda-free array_min/array_max gate, `b` (non-nullable, lower bound
+    only, so no upper bound anchors the null probe) the exists() gate."""
+    from goskema_spark import schema as S
+    from goskema_spark.rowpass import _fast_elem_gate
+
+    sch = S.table(
+        S.field("id", "string", required=True),
+        S.field("a", S.array("int32", elem_min=0, elem_max=100)),
+        S.field("b", S.array("int32", elem_min=0)),
+    )
+    assert _fast_elem_gate(F.col("a"), sch.get("a").dtype, "array<bigint>") is not None
+    assert _fast_elem_gate(F.col("b"), sch.get("b").dtype, "array<int>") is None
+    df = spark.createDataFrame([
+        ("r1", [None, 2**40, -1, 50, 100], [5]),
+        ("r2", [1, 2], [5, None]),
+        ("r3", [1], [-3, 7]),
+        ("r4", [0, 99], [0]),
+        ("r5", [], []),
+        ("r6", None, None),
+        ("r7", [None], [1]),
+    ], "id string, a array<bigint>, b array<int>")
+    _, viols, clean = validate_rows(df, sch, F.col("id"))
+    rows = {(r["row_id"], r["path"], r["code"], r["rule"]): r["params"]
+            for r in viols.collect()}
+    assert set(rows) == {
+        ("r1", "/a/0", "invalid_type", "elem_type"),
+        ("r1", "/a/1", "overflow", "elem_range_int32"),
+        ("r1", "/a/2", "domain_range", "elem_domain"),
+        ("r1", "/a/4", "domain_range", "elem_domain"),
+        ("r2", "/b/1", "invalid_type", "elem_type"),
+        ("r3", "/b/0", "domain_range", "elem_domain"),
+        ("r7", "/a/0", "invalid_type", "elem_type"),
+    }
+    assert viols.count() == len(rows)
+    assert rows[("r1", "/a/1", "overflow", "elem_range_int32")] == {
+        "min": str(-(2**31)), "max": str(2**31 - 1), "got": str(2**40)}
+    assert rows[("r1", "/a/4", "domain_range", "elem_domain")] == {
+        "min": "0", "max": "100", "got": "100"}
+    assert sorted(r["id"] for r in clean.collect()) == ["r4", "r5", "r6"]
+
+
+def test_compiled_checks_follow_schema_assignments(spark):
+    """The memoized compiled check set must follow the schema as it is
+    NOW: plain attribute assignments (not only the builder methods) take
+    effect on the next run."""
+    from goskema_spark import schema as S
+
+    sch = S.table(S.field("id", "string", required=True), S.field("x", "int64"))
+    df = spark.createDataFrame([("r1", 5, "e")], "id string, x bigint, extra string")
+
+    def codes():
+        _, viols, _ = validate_rows(df, sch, F.col("id"))
+        return {(r["path"], r["code"]) for r in viols.collect()}
+
+    assert codes() == {("/extra", "unknown_key")}
+    sch.unknown = "strip"
+    assert codes() == set()
+    sch.fields[1].max = 0
+    assert codes() == {("/x", "too_big")}

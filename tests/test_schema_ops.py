@@ -96,12 +96,14 @@ def test_map_value_validation(spark):
 
 
 def test_discriminated_union(spark):
-    """Discriminator dispatch (reference dsl/union.go:17-52)."""
+    """Discriminator dispatch (reference dsl/union.go:17-52); a variant
+    refinement's `when` gates it like a table-level one."""
     df = _df(spark, [("a", "card", "4111", None),
                      ("b", "bank", None, "DE123"),
                      ("c", "crypto", None, None),
                      ("d", None, None, None),
-                     ("e", "card", None, None)],
+                     ("e", "card", None, None),
+                     ("f", "bank", "4111", None)],
              T.StructType([T.StructField("id", T.StringType()),
                            T.StructField("kind", T.StringType()),
                            T.StructField("card_no", T.StringType()),
@@ -117,14 +119,15 @@ def test_discriminated_union(spark):
                             code="required")],
         "bank": [Refinement("bank_requires_iban", path="/iban",
                             violates=lambda: F.col("iban").isNull(),
-                            code="required")],
+                            code="required",
+                            when=lambda: F.col("card_no").isNull())],
     })
     _, viols, _ = validate_rows(df, sch, F.col("id"))
     got = _codes(viols)
     assert ("c", "/kind", "discriminator_unknown") in got
     assert ("d", "/kind", "discriminator_missing") in got
     assert ("e", "/card_no", "required") in got
-    assert not any(r[0] in ("a", "b") for r in got)
+    assert not any(r[0] in ("a", "b", "f") for r in got)
 
 
 def test_default_applied_presence(spark):
