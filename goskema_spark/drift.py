@@ -1,11 +1,16 @@
 """Distribution-drift detection on n_tok histograms (north rule):
 fixed-width histogram via width_bucket (built-in, single hash aggregate),
-then PSI (population stability index) and a two-sample KS statistic
-computed ON THE DRIVER from the two (tiny) histograms.
+then PSI (population stability index) and a two-sample KS statistic.
 
-The scale story: the only distributed work is one groupBy over the
-bucket id — partial+final hash agg, k buckets out regardless of input
-size. The statistics are O(k) driver-side arithmetic.
+drift_check computes the statistics ON THE DRIVER from the two (tiny)
+collected histograms; psi_ks_between, psi_ks_by_group, windowed_drift
+and streaming.drift_stream stay in Spark and share one scorer,
+score_grouped_histograms. Every histogram comes from grouped_histogram.
+
+The scale story: the only distributed work over the input is one
+groupBy over the bucket id (and group) — partial+final hash agg, k
+buckets out per group regardless of input size. The statistics are O(k)
+arithmetic per group.
 
 Semantics anchor: this is the aggregate analog of goskema's
 `aggregate_violation` code (reference errors.go:31) — a dataset-level
@@ -21,38 +26,55 @@ from pyspark.sql import DataFrame, functions as F
 from goskema_spark.issues import Codes
 
 DEFAULT_BUCKETS = 16
+# floor of a bucket's share, so an empty bucket keeps ln(p / q) finite
+EPS = 1e-6
+
+
+def grouped_histogram(df: DataFrame, column: str, group_expr,
+                      lo: float, hi: float,
+                      buckets: int = DEFAULT_BUCKETS,
+                      cnt_name: str = "cnt_a",
+                      group_name: str = "g") -> DataFrame:
+    """(group, bucket, cnt) equal-width histogram — the one place values
+    are bucketed. `group_expr` may be a column name, a Column (e.g. a
+    window) or None for no group column: (bucket, cnt). Bucket 0
+    catches < lo, bucket `buckets+1` catches >= hi (width_bucket
+    semantics).
+
+    The value is try_cast to double and null AND NaN values are
+    dropped: a non-numeric string must drop, not crash the job (ANSI)
+    or survive as a NULL-bucket row that inflates the totals
+    (non-ANSI, where isnan(NULL) is false); NaN width_buckets to NULL,
+    and a NULL bucket key never matches in the PSI/KS full-outer join,
+    so keeping it would distort both sides' distributions."""
+    cd = F.col(column).try_cast("double")
+    keys = [F.width_bucket(cd, F.lit(float(lo)), F.lit(float(hi)),
+                           F.lit(buckets)).alias("bucket")]
+    if group_expr is not None:
+        ge = F.col(group_expr) if isinstance(group_expr, str) else group_expr
+        keys.insert(0, ge.alias(group_name))
+    return (df.filter(cd.isNotNull() & ~F.isnan(cd))
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias(cnt_name)))
 
 
 def histogram(df: DataFrame, column: str, lo: float, hi: float,
               buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Equal-width histogram: (bucket, bucket_lo, bucket_hi, cnt).
-    Bucket 0 catches < lo, bucket `buckets+1` catches >= hi
-    (width_bucket semantics); null AND NaN values are dropped — NaN
-    width_buckets to NULL, and a NULL bucket key never matches in the
-    PSI/KS full-outer join, so keeping it would distort both sides'
-    distributions (each side's NaN row would count in the total but in
-    no bucket)."""
+    """Equal-width histogram with its bucket edges: (bucket, bucket_lo,
+    bucket_hi, cnt); grouped_histogram without a group."""
     width = (hi - lo) / buckets
-    # try_cast + isNotNull on the CAST value, mirroring drift_stream:
-    # a non-numeric string must drop here, not crash the job (ANSI) or
-    # survive as a NULL-bucket row that inflates the totals (non-ANSI,
-    # where isnan(NULL) is false)
-    cd = F.col(column).try_cast("double")
-    b = F.width_bucket(cd, F.lit(float(lo)), F.lit(float(hi)), F.lit(buckets))
     return (
-        df.filter(cd.isNotNull() & ~F.isnan(cd))
-        .groupBy(b.alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
+        grouped_histogram(df, column, None, lo, hi, buckets, "cnt")
         .withColumn("bucket_lo", (F.lit(lo) + (F.col("bucket") - 1) * F.lit(width)).cast("double"))
         .withColumn("bucket_hi", (F.lit(lo) + F.col("bucket") * F.lit(width)).cast("double"))
         .select("bucket", "bucket_lo", "bucket_hi", "cnt")
     )
 
 
-def _normalize(hist: dict, buckets: int, eps: float = 1e-6) -> list:
+def _normalize(hist: dict, buckets: int) -> list:
     total = sum(hist.values()) or 1
     # buckets 0..buckets+1 (underflow/overflow included)
-    return [max(hist.get(i, 0) / total, eps) for i in range(0, buckets + 2)]
+    return [max(hist.get(i, 0) / total, EPS) for i in range(0, buckets + 2)]
 
 
 def psi(cur_hist: dict, ref_hist: dict, buckets: int = DEFAULT_BUCKETS) -> float:
@@ -77,112 +99,92 @@ def ks_statistic(cur_hist: dict, ref_hist: dict, buckets: int = DEFAULT_BUCKETS)
     return float(d)
 
 
-def psi_ks_between(df_a: DataFrame, df_b: DataFrame, column: str,
-                   lo: float, hi: float, buckets: int = DEFAULT_BUCKETS,
-                   eps: float = 1e-6) -> DataFrame:
-    """Fully-distributed PSI + KS between two datasets' histograms of
-    `column` — one row out. Unlike drift_check (driver-side arithmetic on
-    a collected histogram), this stays in Spark end-to-end, so it can run
-    inside a larger pipeline and be oracle-checked.
-
-    Buckets absent from both sides contribute 0 to both statistics, so
-    only the union of observed buckets is materialized.
-    """
-    ha = histogram(df_a, column, lo, hi, buckets).select("bucket", F.col("cnt").alias("cnt_a"))
-    hb = histogram(df_b, column, lo, hi, buckets).select("bucket", F.col("cnt").alias("cnt_b"))
-    joined = ha.join(hb, "bucket", "full").select(
-        "bucket",
-        F.coalesce("cnt_a", F.lit(0)).alias("cnt_a"),
-        F.coalesce("cnt_b", F.lit(0)).alias("cnt_b"),
-    )
-    tot = joined.agg(F.sum("cnt_a").alias("ta"), F.sum("cnt_b").alias("tb"))
-    j = joined.crossJoin(F.broadcast(tot))
-    # zero-total guard (mirrors score_grouped_histograms' ta>0 & tb>0
-    # gate): an empty side's shares degrade to 0 -> eps, reporting total
-    # drift, instead of DIVIDE_BY_ZERO under ANSI or an all-NULL ks that
-    # masks the drift entirely under non-ANSI
-    share = lambda c, t: F.when(F.col(t) > 0,  # noqa: E731
-                                F.col(c) / F.col(t)).otherwise(F.lit(0.0))
-    p = F.greatest(share("cnt_a", "ta"), F.lit(eps))
-    q = F.greatest(share("cnt_b", "tb"), F.lit(eps))
-    from pyspark.sql import Window
-    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
-    cdf = lambda c, t: F.when(F.col(t) > 0,  # noqa: E731
-                              F.sum(F.col(c)).over(w) / F.col(t)) \
-        .otherwise(F.lit(0.0))
-    scored = j.select(
-        "bucket",
-        ((p - q) * F.log(p / q)).alias("psi_term"),
-        (cdf("cnt_a", "ta") - cdf("cnt_b", "tb")).alias("cdf_diff"),
-    )
-    return scored.agg(
-        F.round(F.sum("psi_term"), 6).alias("psi"),
-        F.round(F.max(F.abs(F.col("cdf_diff"))), 6).alias("ks"),
-    )
-
-
 def score_grouped_histograms(ha: DataFrame, hb: DataFrame,
-                             group_col: str = "g",
-                             eps: float = 1e-6) -> DataFrame:
-    """PSI + KS per group from two PREBUILT histograms:
+                             group_col: str | None = "g") -> DataFrame:
+    """The distributed PSI + KS scorer every drift operator shares:
     ha(group_col, bucket, cnt_a) vs hb(group_col, bucket, cnt_b) ->
-    (group_col, psi, ks). One row per group present with rows on BOTH
+    (group_col, psi, ks), one row per group present with rows on BOTH
     sides; a group with no reference (or no current) distribution has
     nothing to compare against and is omitted rather than reported as a
-    fake zero. Shared scoring tail of psi_ks_by_group / windowed_drift /
-    the streaming drift operator — the math is oracle-proven once and
-    reused.
+    fake zero. With group_col None the histograms have no group column
+    and the result is one (psi, ks) row whatever the inputs: an empty side's
+    shares degrade to 0 -> EPS and score as total drift (instead of
+    DIVIDE_BY_ZERO under ANSI, or an all-NULL ks that masks the drift
+    under non-ANSI), and two empty sides give a NULL row.
+
+    Buckets are aligned by a full-outer join (a bucket missing on one
+    side counts 0 there; buckets absent from both contribute 0 to both
+    statistics). Shares are floored at EPS, the CDF is a running sum
+    over the buckets, and both statistics are rounded to 6 places.
 
     Scale story: inputs are G x (buckets+2) rows regardless of corpus
     size; a full-outer join per group on the bucket axis, per-group
     totals joined back, and a window over <= buckets+2 rows per group
     for the CDF. Nothing is collected.
     """
-    joined = (ha.join(hb, [group_col, "bucket"], "full")
-              .select(group_col, "bucket",
+    from pyspark.sql import Window
+
+    keys = [] if group_col is None else [group_col]
+    joined = (ha.join(hb, keys + ["bucket"], "full")
+              .select(*keys, "bucket",
                       F.coalesce("cnt_a", F.lit(0)).alias("cnt_a"),
                       F.coalesce("cnt_b", F.lit(0)).alias("cnt_b")))
-    tot = (joined.groupBy(group_col)
-           .agg(F.sum("cnt_a").alias("ta"), F.sum("cnt_b").alias("tb"))
-           .filter((F.col("ta") > 0) & (F.col("tb") > 0)))
-    j = joined.join(tot, group_col)
-    p = F.greatest(F.col("cnt_a") / F.col("ta"), F.lit(eps))
-    q = F.greatest(F.col("cnt_b") / F.col("tb"), F.lit(eps))
-    from pyspark.sql import Window
-    w = (Window.partitionBy(group_col).orderBy("bucket")
+    tot = joined.groupBy(*keys).agg(F.sum("cnt_a").alias("ta"),
+                                    F.sum("cnt_b").alias("tb"))
+    if group_col is None:
+        j = joined.crossJoin(F.broadcast(tot))
+    else:
+        j = joined.join(tot.filter((F.col("ta") > 0) & (F.col("tb") > 0)),
+                        group_col)
+    share = lambda c, t: F.when(F.col(t) > 0,  # noqa: E731
+                                F.col(c) / F.col(t)).otherwise(F.lit(0.0))
+    p = F.greatest(share("cnt_a", "ta"), F.lit(EPS))
+    q = F.greatest(share("cnt_b", "tb"), F.lit(EPS))
+    w = (Window.partitionBy(*keys).orderBy("bucket")
          .rowsBetween(Window.unboundedPreceding, 0))
+    cdf = lambda c, t: F.when(F.col(t) > 0,  # noqa: E731
+                              F.sum(F.col(c)).over(w) / F.col(t)) \
+        .otherwise(F.lit(0.0))
     scored = j.select(
-        group_col,
+        *keys,
         ((p - q) * F.log(p / q)).alias("psi_term"),
-        (F.sum(F.col("cnt_a")).over(w) / F.col("ta")
-         - F.sum(F.col("cnt_b")).over(w) / F.col("tb")).alias("cdf_diff"),
+        (cdf("cnt_a", "ta") - cdf("cnt_b", "tb")).alias("cdf_diff"),
     )
-    return (scored.groupBy(group_col)
-            .agg(F.round(F.sum("psi_term"), 6).alias("psi"),
-                 F.round(F.max(F.abs(F.col("cdf_diff"))), 6).alias("ks")))
+    return scored.groupBy(*keys).agg(
+        F.round(F.sum("psi_term"), 6).alias("psi"),
+        F.round(F.max(F.abs(F.col("cdf_diff"))), 6).alias("ks"),
+    )
 
 
-def grouped_histogram(df: DataFrame, column: str, group_expr,
-                      lo: float, hi: float,
-                      buckets: int = DEFAULT_BUCKETS,
-                      cnt_name: str = "cnt_a",
-                      group_name: str = "g") -> DataFrame:
-    """(group, bucket, cnt) histogram — the per-group analog of
-    histogram(). `group_expr` may be a column name or a Column (e.g. a
-    window start). Null/NaN values dropped as in histogram()."""
-    ge = F.col(group_expr) if isinstance(group_expr, str) else group_expr
-    cd = F.col(column).try_cast("double")  # see histogram(): ANSI-safe
-    b = F.width_bucket(cd, F.lit(float(lo)), F.lit(float(hi)),
-                       F.lit(buckets))
-    return (df.filter(cd.isNotNull() & ~F.isnan(cd))
-            .groupBy(ge.alias(group_name), b.alias("bucket"))
-            .agg(F.count(F.lit(1)).alias(cnt_name)))
+def psi_ks_between(df_a: DataFrame, df_b: DataFrame, column: str,
+                   lo: float, hi: float,
+                   buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """Fully-distributed PSI + KS between two datasets' histograms of
+    `column` — one row out, total drift when one side is empty (see
+    score_grouped_histograms). Unlike drift_check (driver-side
+    arithmetic on a collected histogram), this stays in Spark
+    end-to-end, so it can run inside a larger pipeline and be
+    oracle-checked."""
+    return score_grouped_histograms(
+        grouped_histogram(df_a, column, None, lo, hi, buckets, "cnt_a"),
+        grouped_histogram(df_b, column, None, lo, hi, buckets, "cnt_b"),
+        None)
+
+
+def score_against_reference(ha: DataFrame, ref_hist: DataFrame,
+                            group_col: str) -> DataFrame:
+    """PSI + KS of every group of ha(group_col, bucket, cnt_a) against
+    ONE reference histogram ref_hist(bucket, cnt_b): the observed groups
+    are crossed with the broadcast reference (tiny x tiny), then scored
+    by score_grouped_histograms. Shared by windowed_drift and the
+    streaming drift operator."""
+    hb = ha.select(group_col).distinct().crossJoin(F.broadcast(ref_hist))
+    return score_grouped_histograms(ha, hb, group_col)
 
 
 def psi_ks_by_group(df_a: DataFrame, df_b: DataFrame, column: str,
                     group_col: str, lo: float, hi: float,
-                    buckets: int = DEFAULT_BUCKETS,
-                    eps: float = 1e-6) -> DataFrame:
+                    buckets: int = DEFAULT_BUCKETS) -> DataFrame:
     """Per-group PSI + KS — the per-partition-lineage form of the drift
     check (north rule: drift per source, not just globally). One row per
     group present in BOTH sides. Two (group, bucket) hash aggregates
@@ -191,18 +193,18 @@ def psi_ks_by_group(df_a: DataFrame, df_b: DataFrame, column: str,
                            "cnt_a", group_col)
     hb = grouped_histogram(df_b, column, group_col, lo, hi, buckets,
                            "cnt_b", group_col)
-    return score_grouped_histograms(ha, hb, group_col, eps)
+    return score_grouped_histograms(ha, hb, group_col)
 
 
 def windowed_drift(df: DataFrame, column: str, ref: DataFrame,
                    lo: float, hi: float, buckets: int = DEFAULT_BUCKETS,
-                   ts_col: str = "ts", window: str = "1 hour",
-                   eps: float = 1e-6) -> DataFrame:
+                   ts_col: str = "ts", window: str = "1 hour") -> DataFrame:
     """Per-time-window PSI + KS of `column` against a FIXED reference
     snapshot: (window_start, psi, ks), one row per tumbling window that
     has any in-range rows. The batch twin of the streaming drift
-    operator (streaming.drift_stream) — both score the same grouped
-    histograms, so the stream can be cross-validated against this.
+    operator (streaming.drift_stream) — both score through
+    score_against_reference, so the stream can be cross-validated
+    against this.
 
     Scale story: one (window, bucket) hash aggregate over the corpus
     (W x (buckets+2) rows out), one bucket aggregate over the reference,
@@ -212,11 +214,8 @@ def windowed_drift(df: DataFrame, column: str, ref: DataFrame,
     ws = F.window(F.col(ts_col).cast("timestamp"), window)["start"]
     ha = grouped_histogram(df, column, ws, lo, hi, buckets,
                            "cnt_a", "window_start")
-    ref_hist = (histogram(ref, column, lo, hi, buckets)
-                .select("bucket", F.col("cnt").alias("cnt_b")))
-    wins = ha.select("window_start").distinct()
-    hb = wins.crossJoin(F.broadcast(ref_hist))
-    return score_grouped_histograms(ha, hb, "window_start", eps)
+    ref_hist = grouped_histogram(ref, column, None, lo, hi, buckets, "cnt_b")
+    return score_against_reference(ha, ref_hist, "window_start")
 
 
 def drift_check(df: DataFrame, column: str, ref: DataFrame, lo: float, hi: float,

@@ -11,8 +11,8 @@ filtered for nulls.
 
 One path per job: the table root, nested structs and array-element
 objects compile through one member walk (`_compile_members`), and each
-per-item check set is one condition list from which both its violation
-builder and its gate derive (see CompiledChecks).
+per-item check set is written down once, with its violation builder and
+its gate derived from it by one shared helper (see CompiledChecks).
 
 Fail-fast vs collect (reference api.go:147-156): collect keeps the full
 array; fail_fast slices it to 1 element per row (and callers can
@@ -88,12 +88,18 @@ class CompiledChecks:
     struct construction.
 
     Per-item check sets (array elements, map entries) are each written
-    down ONCE, as a list of (cond(item), code, rule, params(item),
-    message) entries: `_first_of` builds the violation of the first
-    entry that fires and `_any_of` the exists() gate, so the body and
-    its gate cannot disagree on which checks exist. The integral-array
-    gate is the one restatement, in its codegen'd array_min/array_max
-    form (`_fast_elem_gate`)."""
+    down ONCE and built by one of three helpers, so a body and its gate
+    cannot disagree on which checks exist:
+      `_first_of`         first firing check per item, from a list of
+                          (cond(item), code, rule, params(item), message)
+                          entries (`_any_of` is its exists() gate);
+      `_add_per_element`  every firing check per element, from a
+                          per-element CompiledChecks (element objects,
+                          list-map key presence, embedded resources);
+      `_add_duplicates`   duplicate-element attribution (list-type set
+                          and map).
+    The integral-array gate is the one restatement, in its codegen'd
+    array_min/array_max form (`_fast_elem_gate`)."""
 
     def __init__(self):
         self.scalars: list = []   # (cond, violation struct)
@@ -227,31 +233,27 @@ def compile_checks(schema: TableSchema, df: DataFrame) -> CompiledChecks:
     # branch's violation array; keep the FIRST branch with the fewest
     # violations (zero-issue branch -> empty array wins automatically)
     for orr in schema.or_refinements:
-        branch_arrays = []
-        all_conds = []
+        branches = []
         for branch in orr.branches:
-            items = []
+            b = CompiledChecks()
             for r in branch:
-                cond = _refinement_cond(r)
-                all_conds.append(cond)
-                items.append(F.when(cond, violation(
-                    r.path, r.code, rule=f"{orr.name}:{r.name}",
-                    params=r.params() if r.params else None)))
-            branch_arrays.append(
-                F.filter(F.array(*items), lambda x: x.isNotNull())
-                if items else F.array().cast(_VIOL_ARR_DDL))
-        chosen = branch_arrays[0]
-        for arr in branch_arrays[1:]:
+                b.add(_refinement_cond(r), r.path, r.code, rule=f"{orr.name}:{r.name}",
+                      params=r.params() if r.params else None)
+            branches.append(b)
+        chosen = branches[0].body()
+        for b in branches[1:]:
+            arr = b.body()
             # strict < keeps the first minimal branch on ties
             chosen = F.when(F.size(arr) < F.size(chosen), arr).otherwise(chosen)
         # cheap gate: the Or result is non-empty only if SOME branch rule
         # fires (a zero-issue branch would have been chosen otherwise).
         # WIDE (exact=False): one branch firing while another stays clean
         # trips the gate yet yields an empty chosen array.
+        conds = [c for b in branches for c, _ in b.scalars]
         gate = F.lit(False)
-        for c in all_conds:
+        for c in conds:
             gate = gate | c
-        out.add_array(chosen, gate=gate if all_conds else None, exact=False)
+        out.add_array(chosen, gate=gate if conds else None, exact=False)
 
     return out
 
@@ -347,8 +349,7 @@ def _compile_field(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     # x-kubernetes-embedded-resource presence checks on the field itself
     # (array items carry the flag on ArraySpec, handled in _compile_array)
     if f.embedded_resource and not isinstance(f.dtype, ArraySpec):
-        for cond, pk, code, msg in _embedded_conds(col, p, phys_type):
-            out.add(cond, pk, code, rule="embedded_resource", message=msg)
+        _add_embedded(out, col, p, phys_type)
 
 
 def _compile_pattern_keys(out: CompiledChecks, schema: TableSchema,
@@ -529,43 +530,42 @@ def _compile_anyof(out: CompiledChecks, f: Field, col: Column, p) -> None:
                 rule=f"anyof_{f.name}", params={"matched": m})
 
 
-def _embedded_conds(el: Column, ep, phys_type) -> list:
+def _add_embedded(out: CompiledChecks, el: Column, ep, phys_type) -> None:
     """x-kubernetes-embedded-resource presence checks for ONE embedded
-    object (reference kubeopenapi/embedded.go:19-75): apiVersion/kind
-    required strings, metadata required object. Returns
-    [(cond, path, code, message)]; type-ness of the sub-values is judged
-    from the PHYSICAL type (columnar analog of the reference's per-value
-    type switch — a homogeneous map<string,string> column can carry the
-    presence checks but not metadata's object-ness)."""
+    object at pointer `ep` (reference kubeopenapi/embedded.go:19-75):
+    apiVersion/kind required strings, metadata required object. Type-ness
+    of the sub-values is judged from the PHYSICAL type (columnar analog
+    of the reference's per-value type switch — a homogeneous
+    map<string,string> column can carry the presence checks but not
+    metadata's object-ness)."""
     from pyspark.sql import types as T
 
-    conds = []
     nn = el.isNotNull()
+
+    def check(cond, k, code=Codes.REQUIRED,
+              message="required for embedded resource"):
+        out.add(cond, _pjoin(ep, "/" + k), code, rule="embedded_resource",
+                message=message)
+
     if isinstance(phys_type, T.StructType):
         names = {sf.name: sf.dataType for sf in phys_type.fields}
         for k, want in (("apiVersion", "string"), ("kind", "string"),
                         ("metadata", "object")):
-            pk = _pjoin(ep, "/" + k)
             if k not in names:
-                conds.append((nn, pk, Codes.REQUIRED,
-                              "required for embedded resource"))
+                check(nn, k)
                 continue
             sub = el.getField(k)
-            conds.append((nn & sub.isNull(), pk, Codes.REQUIRED,
-                          "required for embedded resource"))
+            check(nn & sub.isNull(), k)
             ok_type = (isinstance(names[k], T.StringType) if want == "string"
                        else isinstance(names[k], (T.StructType, T.MapType)))
             if not ok_type:
-                conds.append((nn & sub.isNotNull(), pk, Codes.INVALID_TYPE,
-                              f"{k} must be {want}"))
+                check(nn & sub.isNotNull(), k, Codes.INVALID_TYPE,
+                      f"{k} must be {want}")
     elif isinstance(phys_type, T.MapType):
         # presence-only on homogeneous maps; scalar map values cannot
         # carry metadata's object-ness (documented columnar limit)
         for k in ("apiVersion", "kind", "metadata"):
-            conds.append((nn & ~F.map_contains_key(el, k),
-                          _pjoin(ep, "/" + k), Codes.REQUIRED,
-                          "required for embedded resource"))
-    return conds
+            check(nn & ~F.map_contains_key(el, k), k)
 
 
 def _compile_scalar(out: CompiledChecks, f: Field, col: Column, p: str, actual_type: str):
@@ -782,6 +782,81 @@ def _any_of(conds: list, *item) -> Column:
     return bad
 
 
+def _idx_path(p, i) -> Column:
+    """Pointer of element `i` of the array at pointer `p`."""
+    return F.concat(p if isinstance(p, Column) else F.lit(p),
+                    F.lit("/"), i.cast("string"))
+
+
+def _add_per_element(out: CompiledChecks, col: Column, elem_type, p,
+                     build) -> None:
+    """Report EVERY firing check of every element of the array `col` at
+    pointer `p`. `build(sub, t, ep)` adds element `t`'s checks, at
+    element pointer `ep`, to a fresh CompiledChecks; the violation body
+    (each element's combined()), the row gate (exists over each
+    element's any_violation(), none when the element set has an ungated
+    array check) and its exactness all derive from that one set. An
+    element set that compiles no checks adds nothing."""
+    def checks(t, i):
+        sub = CompiledChecks()
+        build(sub, t, _idx_path(p, i))
+        return sub
+
+    probe = checks(F.lit(None) if elem_type is None
+                   else F.lit(None).cast(elem_type), F.lit(0))
+    if not probe.scalars and not probe.arrays:
+        return
+    nn = col.isNotNull()
+    gate = None
+    if probe.any_violation() is not None:
+        gate = nn & F.exists(col, lambda t: checks(t, F.lit(0)).any_violation())
+    # exactness propagates from the element check-set: a wide nested
+    # gate (e.g. an Or-combinator inside the element schema) makes this
+    # array gate wide too — claiming exact would let the clean path drop
+    # rows whose gate fired without any violation
+    out.add_array(F.when(nn, F.flatten(F.transform(
+        col, lambda t, i: checks(t, i).combined())))
+        .otherwise(F.array().cast(_VIOL_ARR_DDL)),
+        gate=gate, exact=probe.gate_is_exact())
+
+
+def _add_duplicates(out: CompiledChecks, col: Column, p, key, rule: str,
+                    message: str, extra=None) -> None:
+    """Within-row duplicate elements of the array `col` at pointer `p`,
+    compared by `key(element)` (None: the element itself): each non-first
+    occurrence is a duplicate_item violation with params first/dup plus
+    `extra(element)`.
+
+    Scale note: first/dup ATTRIBUTION is O(n²) (array_position scans
+    per element), so it is gated behind an O(n) duplicate-EXISTENCE
+    probe (size vs array_distinct): clean rows — the overwhelming
+    majority at any sane dup rate — never pay the quadratic path, and
+    a 10k-element clean array costs one distinct pass, not 10^8
+    comparisons. Rows that DO contain duplicates pay O(n²) once;
+    bounded by max_len when declared.
+
+    The probe runs over NON-NULL elements only: attribution skips nulls
+    (no stable array_position for null), so a null-only duplicate must
+    not trip the gate — a wide-but-empty gate would silently drop the
+    row from the exact-gate clean path (neither clean nor violating).
+    Null elements are the element schema's concern."""
+    keyed = col if key is None else F.transform(col, key)
+    nn_keys = F.filter(col, lambda t: t.isNotNull())
+    if key is not None:
+        nn_keys = F.transform(nn_keys, key)
+    has_dup = col.isNotNull() & (F.size(F.array_distinct(nn_keys)) < F.size(nn_keys))
+
+    def dup(t, i):
+        first = F.array_position(keyed, t if key is None else key(t)) - 1
+        params = {"first": first, "dup": i, **(extra(t) if extra else {})}
+        return F.when(t.isNotNull() & (first != i),
+                      violation(_idx_path(p, i), Codes.DUPLICATE_ITEM, rule=rule,
+                                params=params, message=message))
+    out.add_array(F.when(has_dup, F.filter(F.transform(col, dup),
+                                           lambda x: x.isNotNull()))
+                  .otherwise(F.array().cast(_VIOL_ARR_DDL)), gate=has_dup)
+
+
 def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     from pyspark.sql import types as T
 
@@ -790,11 +865,6 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
     elem_type = phys_type.elementType if isinstance(phys_type, T.ArrayType) else None
     nn = col.isNotNull()
     sz = F.size(col)
-    empty = F.array().cast(_VIOL_ARR_DDL)
-
-    def idx_path(i):
-        return F.concat(p if isinstance(p, Column) else F.lit(p),
-                        F.lit("/"), i.cast("string"))
 
     # length bounds (reference dsl/array.go:45-48, checks :137-158)
     if spec.min_len is not None:
@@ -838,9 +908,9 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
         # majority at scale) never build violation structs
         arr = F.when(
             F.exists(col, lambda t: _any_of(conds, t)),
-            F.filter(F.transform(col, lambda t, i: _first_of(conds, idx_path(i), t)),
+            F.filter(F.transform(col, lambda t, i: _first_of(conds, _idx_path(p, i), t)),
                      lambda x: x.isNotNull()),
-        ).otherwise(empty)
+        ).otherwise(F.array().cast(_VIOL_ARR_DDL))
         fast = _fast_elem_gate(col, spec, actual_type)
         out.add_array(arr, gate=fast if fast is not None
                       else F.exists(col, lambda t: _any_of(conds, t)))
@@ -864,142 +934,48 @@ def _compile_array(out: CompiledChecks, f: Field, col: Column, p, phys_type):
                 f"field '{p}' declares an array element object schema but the "
                 f"physical type is {actual_type or 'unknown'}")
 
-        def elem_checks(t, i):
-            ep = idx_path(i)
-            sub = CompiledChecks()
+        def elem_object(sub, t, ep):
             if not spec.elem_nullable:
                 sub.add(t.isNull(), ep, Codes.INVALID_TYPE, rule="elem_type")
             inner = CompiledChecks()
             _compile_object(inner, spec.elem_schema, t, ep, elem_type)
             _gate_checks(sub, inner, t.isNotNull())
-            return sub
-
-        def elem_obj_viols(t, i):
-            return elem_checks(t, i).combined()
-
-        # cheap per-element gate = the element check-set's own OR
-        # condition (None when the nested set itself has an ungated
-        # array check — then every row builds)
-        probe = elem_checks(F.lit(None).cast(elem_type), F.lit(0))
-        if probe.any_violation() is not None:
-            gate = nn & F.exists(
-                col, lambda t: elem_checks(t, F.lit(0)).any_violation())
-        else:
-            gate = None
-        # exactness propagates from the element check-set: a wide nested
-        # gate (e.g. an Or-combinator inside the element schema) makes
-        # this array gate wide too — claiming exact would let the clean
-        # path drop rows whose gate fired without any violation
-        out.add_array(F.when(nn, F.flatten(F.transform(col, elem_obj_viols)))
-                      .otherwise(empty), gate=gate,
-                      exact=probe.gate_is_exact())
+        _add_per_element(out, col, elem_type, p, elem_object)
 
     # x-kubernetes-list-type: set — within-row element uniqueness
     # (reference kubeopenapi/list.go:20-40 setChecker, code duplicate_item)
-    #
-    # Scale note: first/dup ATTRIBUTION is O(n²) (array_position scans
-    # per element), so it is gated behind an O(n) duplicate-EXISTENCE
-    # probe (size vs array_distinct): clean rows — the overwhelming
-    # majority at any sane dup rate — never pay the quadratic path, and
-    # a 10k-element clean array costs one distinct pass, not 10^8
-    # comparisons. Rows that DO contain duplicates pay O(n²) once;
-    # bounded by max_len when declared.
     if spec.list_set:
-        def set_dup(t, i):
-            first = F.array_position(col, t) - 1
-            return F.when(
-                t.isNotNull() & (first != i),
-                violation(idx_path(i), Codes.DUPLICATE_ITEM, rule="list_set_unique",
-                          params={"first": first, "dup": i, "key": t},
-                          message="duplicate element in set"))
-        # gate over NON-NULL elements only: attribution skips nulls (no
-        # stable array_position for null), so a null-only duplicate must
-        # not trip the gate — a wide-but-empty gate would silently drop
-        # the row from the exact-gate clean path (neither clean nor
-        # violating). Null elements are the element schema's concern.
-        nn_elems = F.filter(col, lambda t: t.isNotNull())
-        has_dup = F.size(F.array_distinct(nn_elems)) < F.size(nn_elems)
-        out.add_array(F.when(nn & has_dup,
-                             F.filter(F.transform(col, set_dup),
-                                      lambda x: x.isNotNull())).otherwise(empty),
-                      gate=nn & has_dup)
+        _add_duplicates(out, col, p, None, "list_set_unique",
+                        "duplicate element in set", lambda t: {"key": t})
 
     # x-kubernetes-list-type: map — uniqueness by composite element key +
     # required key fields (reference kubeopenapi/list.go:43-100 mapChecker)
     if spec.list_map_keys:
         keys = list(spec.list_map_keys)
-        keys_arr = F.transform(col, lambda e: F.struct(
-            *[e.getField(k).alias(k) for k in keys]))
-
-        def map_dup(t, i):
-            ks = F.struct(*[t.getField(k).alias(k) for k in keys])
-            first = F.array_position(keys_arr, ks) - 1
-            return F.when(
-                t.isNotNull() & (first != i),
-                violation(idx_path(i), Codes.DUPLICATE_ITEM, rule="list_map_unique",
-                          params={"first": first, "dup": i},
-                          message="duplicate element in list-map by keys"))
-        # same O(n) existence gate as list_set: quadratic attribution
-        # only runs on rows that actually contain a duplicate key.
-        # Keys of NULL elements are excluded (attribution skips null
-        # elements) so the gate stays exact — see list_set above.
-        nn_keys = F.transform(
-            F.filter(col, lambda t: t.isNotNull()),
-            lambda e: F.struct(*[e.getField(k).alias(k) for k in keys]))
-        has_key_dup = F.size(F.array_distinct(nn_keys)) < F.size(nn_keys)
-        out.add_array(F.when(nn & has_key_dup,
-                             F.filter(F.transform(col, map_dup),
-                                      lambda x: x.isNotNull())).otherwise(empty),
-                      gate=nn & has_key_dup)
+        _add_duplicates(out, col, p,
+                        lambda e: F.struct(*[e.getField(k).alias(k) for k in keys]),
+                        "list_map_unique", "duplicate element in list-map by keys")
 
         # keys already declared required by the elem schema are covered
         # by its own required check — don't double-report
         covered = {cf.name for cf in (spec.elem_schema.fields if spec.elem_schema else [])
                    if cf.required and cf.default is None}
-        probe_keys = [k for k in keys if k not in covered]
-        if probe_keys:
-            def missing_keys(t, i):
-                per_key = [
-                    F.when(t.isNotNull() & t.getField(k).isNull(),
-                           violation(F.concat(idx_path(i), F.lit(pointer(k))),
-                                     Codes.REQUIRED, rule="list_map_key_required",
-                                     message="required for list-map-keys"))
-                    for k in probe_keys]
-                return F.array(*per_key)
 
-            def any_key_null(t):
-                cond = F.lit(False)
-                for k in probe_keys:
-                    cond = cond | (t.isNotNull() & t.getField(k).isNull())
-                return cond
-            out.add_array(F.when(nn, F.filter(F.flatten(F.transform(col, missing_keys)),
-                                              lambda x: x.isNotNull())).otherwise(empty),
-                          gate=nn & F.exists(col, any_key_null))
+        def key_presence(sub, t, ep):
+            for k in keys:
+                if k not in covered:
+                    sub.add(t.isNotNull() & t.getField(k).isNull(),
+                            _pjoin(ep, pointer(k)), Codes.REQUIRED,
+                            rule="list_map_key_required",
+                            message="required for list-map-keys")
+        _add_per_element(out, col, elem_type, p, key_presence)
 
     # x-kubernetes-embedded-resource on array items: each element must
     # carry apiVersion/kind/metadata, issues at /<field>/<i>/<key>
     # (reference kubeopenapi/embedded.go:30-40 array branch)
     if spec.embedded_resource:
-        def emb_viols(t, i):
-            cs = _embedded_conds(t, idx_path(i), elem_type)
-            if not cs:
-                return F.array().cast(_VIOL_ARR_DDL)
-            items = [F.when(c, violation(pk, code, rule="embedded_resource",
-                                         message=msg))
-                     for c, pk, code, msg in cs]
-            return F.filter(F.array(*items), lambda x: x.isNotNull())
-
-        def any_emb_bad(t):
-            cond = F.lit(False)
-            for c, *_ in _embedded_conds(t, "", elem_type):
-                cond = cond | c
-            return cond
-
-        if _embedded_conds(F.lit(None).cast(elem_type) if elem_type else col,
-                           "", elem_type):
-            out.add_array(F.when(nn, F.flatten(F.transform(col, emb_viols)))
-                          .otherwise(empty),
-                          gate=nn & F.exists(col, any_emb_bad))
+        _add_per_element(out, col, elem_type, p,
+                         lambda sub, t, ep: _add_embedded(sub, t, ep, elem_type))
 
 
 def _compile_map(out: CompiledChecks, f: Field, col: Column, p: str):

@@ -260,19 +260,22 @@ def drift_stream(stream_df: DataFrame, column: str, ref: DataFrame,
                  checkpoint: Optional[str] = None):
     """STREAMING distribution-drift detection: per closed event-time
     window, PSI + KS of `column` against a fixed reference snapshot —
-    the streaming analog of the north rule's drift check (and of
-    drift.windowed_drift, its batch twin scoring identical grouped
-    histograms via drift.score_grouped_histograms).
+    the streaming analog of the north rule's drift check and of
+    drift.windowed_drift, its batch twin: both bucket with
+    drift.grouped_histogram and cross each window with the reference
+    through drift.score_against_reference, so both are scored by
+    drift.score_grouped_histograms, the one distributed PSI/KS scorer.
 
     Plan: a watermarked tumbling-window (window, bucket) count aggregate
     runs in APPEND mode, so a window's finalized histogram is emitted
     exactly once — in the trigger where the watermark passes its end
     (late rows beyond the watermark are dropped by state eviction, and
-    windows still open when a bounded stream ends never emit). Each
-    emitted histogram batch is scored in foreachBatch against the
-    reference histogram, which is finalized ONCE at writer construction
-    (<= buckets+2 rows, rebuilt per batch as a broadcast literal — no
-    repeated scans of `ref`).
+    windows still open when a bounded stream ends never emit). It groups
+    by the window struct itself: grouping by its start field is not
+    supported in append mode. Each emitted histogram batch is scored in
+    foreachBatch against the reference histogram, which is finalized
+    ONCE at writer construction (<= buckets+2 rows, rebuilt per batch as
+    a broadcast literal — no repeated scans of `ref`).
 
     State: (#open windows x (buckets+2)) count rows — bounded by the
     watermark regardless of stream length. Scoring per trigger touches
@@ -282,43 +285,30 @@ def drift_stream(stream_df: DataFrame, column: str, ref: DataFrame,
     `sink` (parquet, partitioned by batch_id with dynamic overwrite —
     idempotent under micro-batch replay) and/or passed to
     `on_batch(scored_df, batch_id)`. Returns the DataStreamWriter."""
-    from goskema_spark.drift import histogram, score_grouped_histograms
+    from goskema_spark.drift import grouped_histogram, score_against_reference
 
-    ref_rows = [(int(r["bucket"]), int(r["cnt"]))
-                for r in histogram(ref, column, lo, hi, buckets)
-                .select("bucket", "cnt").collect()]
+    ref_rows = [(int(r["bucket"]), int(r["cnt_b"])) for r in grouped_histogram(
+        ref, column, None, lo, hi, buckets, "cnt_b").collect()]
 
-    src = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    cd = F.col(column).try_cast("double")
+    src = (stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+           .withWatermark(ts_col, watermark))
     hist_stream = (
-        # try_cast + isNotNull on the CAST value: a non-numeric string
-        # must drop here, not survive as a NULL width_bucket row that
-        # inflates the window total and distorts PSI (isnan(NULL) is
-        # false, so the raw isNotNull filter alone would pass it) — and
-        # under ANSI a plain cast would kill the stream instead
-        src.filter(cd.isNotNull() & ~F.isnan(cd))
-        .withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"),
-                 F.width_bucket(cd, F.lit(float(lo)), F.lit(float(hi)),
-                                F.lit(buckets)).alias("bucket"))
-        .agg(F.count(F.lit(1)).alias("cnt_a"))
+        grouped_histogram(src, column, F.window(F.col(ts_col), window),
+                          lo, hi, buckets, "cnt_a", "w")
         .select(F.col("w.start").alias("window_start"), "bucket", "cnt_a")
     )
 
     def process(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        spark = batch_df.sparkSession
-        ref_df = spark.createDataFrame(
+        ref_df = batch_df.sparkSession.createDataFrame(
             ref_rows, "bucket bigint, cnt_b bigint")
-        wins = batch_df.select("window_start").distinct()
-        hb = wins.crossJoin(F.broadcast(ref_df))
         scored = (
-            score_grouped_histograms(
+            score_against_reference(
                 batch_df.select("window_start",
                                 F.col("bucket").cast("bigint").alias("bucket"),
                                 "cnt_a"),
-                hb, "window_start")
+                ref_df, "window_start")
             .select("window_start", "psi", "ks",
                     ((F.col("psi") > psi_threshold)
                      | (F.col("ks") > ks_threshold)).alias("drifted"))

@@ -1,5 +1,6 @@
 """Tests for distribution drift: the per-group PSI/KS operator must agree
-group-by-group with the oracle-proven global operator."""
+group-by-group with the oracle-proven global operator, drift_check's
+verdicts, and the empty-side contract of the global operator."""
 
 from pyspark.sql import functions as F, types as T
 
@@ -56,3 +57,67 @@ def test_by_group_ignores_nulls_in_column(spark):
     assert out.count() == 2  # still one row per group, no NaN poisoning
     for r in out.collect():
         assert r["psi"] is not None and r["ks"] is not None
+
+
+def _hist_ref(df):
+    from goskema_spark.drift import histogram
+    return histogram(df, "v", 0, 50, 10)
+
+
+def test_drift_check_identical_sample_passes(spark):
+    from goskema_spark.drift import drift_check
+
+    cur = _data(spark)
+    out = drift_check(cur, "v", _hist_ref(cur).select("bucket", "cnt"),
+                      0, 50, 10)
+    assert out["verdict"] == "pass" and out["code"] is None
+    assert out["psi"] == 0 and out["ks"] == 0
+
+
+def test_drift_check_shifted_sample_fails(spark):
+    from goskema_spark.drift import drift_check
+
+    ref = _hist_ref(_data(spark)).select("bucket", "cnt")
+    cur = _data(spark).withColumn("v", F.col("v") + 20)
+    out = drift_check(cur, "v", ref, 0, 50, 10)
+    assert out["verdict"] == "fail"
+    assert out["code"] == "aggregate_violation"
+
+
+def test_drift_check_reference_shapes_agree(spark):
+    """A (bucket, cnt) reference and the FIXTURES F3 (bucket_lo,
+    bucket_hi, cnt) reference of the same histogram score the same."""
+    from goskema_spark.drift import drift_check
+
+    h = _hist_ref(_shifted(spark))
+    by_id = h.select("bucket", "cnt")
+    by_edges = h.select(F.col("bucket_lo").cast("int").alias("bucket_lo"),
+                        F.col("bucket_hi").cast("int").alias("bucket_hi"),
+                        "cnt")
+    a = drift_check(_data(spark), "v", by_id, 0, 50, 10)
+    b = drift_check(_data(spark), "v", by_edges, 0, 50, 10)
+    assert a["psi"] > 0
+    assert (a["psi"], a["ks"]) == (b["psi"], b["ks"])
+
+
+def test_drift_check_empty_current_sample_fails(spark):
+    from goskema_spark.drift import drift_check
+
+    ref = _hist_ref(_data(spark)).select("bucket", "cnt")
+    out = drift_check(_data(spark).filter(F.lit(False)), "v", ref, 0, 50, 10)
+    assert out["verdict"] == "fail"
+    assert out["code"] == "aggregate_violation"
+
+
+def test_psi_ks_between_empty_sides(spark):
+    """One empty side scores as total drift in one row; both sides empty
+    give one all-NULL row."""
+    data = _data(spark)
+    empty = data.filter(F.lit(False))
+    for a, b in ((empty, data), (data, empty)):
+        rows = psi_ks_between(a, b, "v", 0, 50, 10).collect()
+        assert len(rows) == 1
+        assert rows[0]["ks"] == 1.0 and rows[0]["psi"] > 0.25
+    rows = psi_ks_between(empty, empty, "v", 0, 50, 10).collect()
+    assert len(rows) == 1
+    assert rows[0]["psi"] is None and rows[0]["ks"] is None

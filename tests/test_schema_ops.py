@@ -528,3 +528,45 @@ def test_incremental_distinct_sketches_merge_exactly(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="cannot also be sketched"):
         distinct_sketches(df, ["doc_id", "source"], by="source")
+
+
+def test_per_element_check_sets_report_every_firing_check(spark):
+    """The per-element "all of" check sets — list-map key presence and
+    embedded-resource presence — report every firing check of every
+    element, next to the element object's own checks; under fail_fast a
+    row keeps its first issue, and a clean row stays clean."""
+    elem = S.table(S.field("k", "string"), S.field("n", "string"),
+                   S.field("v", "int64", max=5))
+    sch = S.table(
+        S.field("rid", "string", required=True),
+        S.field("xs", S.array(elem_schema=elem, list_map_keys=["k", "n"])),
+        S.field("items", S.array(embedded_resource=True, elem_nullable=True)))
+    ddl = ("rid string, xs array<struct<k:string,n:string,v:bigint>>, "
+           "items array<struct<apiVersion:string,kind:string,"
+           "metadata:struct<name:string>>>")
+    df = spark.createDataFrame(
+        [("bad", [(None, None, 9), ("a", None, 1)],
+          [(None, None, None), None]),
+         ("ok", [("a", "b", 1), ("a", "c", 5)],
+          [("v1", "Pod", ("p",))])],
+        ddl)
+    _, viols, clean = validate_rows(df, sch, F.col("rid"))
+    got = sorted((r["row_id"], r["path"], r["code"], r["rule"])
+                 for r in viols.collect())
+    key, emb = "list_map_key_required", "embedded_resource"
+    assert got == sorted([
+        ("bad", "/xs/0/k", "required", key),
+        ("bad", "/xs/0/n", "required", key),
+        ("bad", "/xs/0/v", "too_big", "max"),
+        ("bad", "/xs/1/n", "required", key),
+        ("bad", "/items/0/apiVersion", "required", emb),
+        ("bad", "/items/0/kind", "required", emb),
+        ("bad", "/items/0/metadata", "required", emb),
+    ])
+    assert [r["rid"] for r in clean.collect()] == ["ok"]
+
+    sch.fail_fast = True
+    _, viols, clean = validate_rows(df, sch, F.col("rid"))
+    assert [(r["row_id"], r["path"]) for r in viols.collect()] == [
+        ("bad", "/items/0/apiVersion")]
+    assert [r["rid"] for r in clean.collect()] == ["ok"]

@@ -14,7 +14,8 @@ import sys
 import duckdb
 from pyspark.sql import SparkSession
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import __spark_entry__ as entry  # noqa: E402
 
 SF_DIR = os.environ.get("GSK_ORACLE_SF", "/root/testdata/sf0.01")
